@@ -95,20 +95,23 @@ def reduced_increased_counts(df: DataFrame) -> tuple[int, int]:
 def conditional_sums(df: DataFrame) -> tuple[float, float, float]:
     """(sum | reduced, sum | increased, total) in ONE aggregation pass
     (the reference runs three separate filter+agg jobs,
-    project-co2.py:218-222)."""
+    project-co2.py:218-222).  An empty table sums to 0.0 (SQL SUM over
+    zero rows is NULL)."""
+    zero = F.lit(0.0)
     row = df.agg(
-        F.sum(F.when(F.col("isReduced"), F.col("change")).otherwise(0.0)).alias("r"),
-        F.sum(F.when(~F.col("isReduced"), F.col("change")).otherwise(0.0)).alias("i"),
-        F.sum("change").alias("t"),
+        F.coalesce(F.sum(F.when(F.col("isReduced"), F.col("change")).otherwise(0.0)), zero).alias("r"),
+        F.coalesce(F.sum(F.when(~F.col("isReduced"), F.col("change")).otherwise(0.0)), zero).alias("i"),
+        F.coalesce(F.sum("change"), zero).alias("t"),
     ).collect()[0]
     return float(row["r"]), float(row["i"]), float(row["t"])
 
 
 def selected_countries(df: DataFrame, names: list[str] | None = None) -> DataFrame:
     """The 5-country comparison (project-co2.py:226), expressed with
-    isin instead of the reference's 5-way OR chain."""
+    isin instead of the reference's 5-way OR chain.  ``names=None``
+    selects the reference's five; an empty list selects no rows."""
     return (
-        df.filter(F.col("Country Name").isin(names or COMPARISON_COUNTRIES))
+        df.filter(F.col("Country Name").isin(names if names is not None else COMPARISON_COUNTRIES))
         .select("Country Name", BASE_YEAR, TARGET_YEAR, "change", "isReduced")
         .orderBy("change")
     )

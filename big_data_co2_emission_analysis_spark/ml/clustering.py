@@ -16,7 +16,10 @@ Differences from the reference, on purpose:
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Sequence
 from dataclasses import dataclass
+from multiprocessing.pool import ThreadPool
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,7 +45,7 @@ class ElbowPoint:
 
 def elbow_sweep(
     df: DataFrame,
-    ks: range = range(2, 10),
+    ks: Sequence[int] = range(2, 10),
     seed: int = 1,
     sample_fraction: float | None = 0.1,
     sample_seed: int = 42,
@@ -50,18 +53,54 @@ def elbow_sweep(
 ) -> list[ElbowPoint]:
     """M2: the reference's model-selection loop (project-co2.py:44-59):
     for each k, fit on a seeded Bernoulli sample and record cost.
-    Driver-side control loop around distributed jobs -- the canonical
-    hyperparameter sweep shape."""
-    from pyspark.ml.clustering import KMeans
 
+    The per-k fits are independent and each is a chain of small jobs, so
+    they run concurrently: ``KMeans.fitMultiple`` over one param map per
+    k, drained by ``min(len(ks), defaultParallelism)`` driver threads
+    (the ``CrossValidator`` pattern).  Each thread target is wrapped in
+    ``inheritable_thread_target``, so the caller's job group, local
+    properties and tags reach every fit's jobs.  Costs are the same as
+    sequential fits: every fit reads the one cached sample (not
+    repartitioned -- k-means|| initialisation depends on partition
+    indices) with the same seed.  Points come back in the order of
+    ``ks``.  If a fit raises, no further fit starts; the in-flight fits
+    finish, the sample is released, and the first error is re-raised."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.util import inheritable_thread_target
+
+    ks = list(ks)
+    if not ks:
+        return []
     train = df.sample(False, sample_fraction, seed=sample_seed) if sample_fraction else df
     train = train.cache()
     try:
-        out = []
-        for k in ks:
-            model = KMeans(k=k, seed=seed, featuresCol=features_col).fit(train)
-            out.append(ElbowPoint(k=k, cost=float(model.summary.trainingCost)))
-        return out
+        est = KMeans(seed=seed, featuresCol=features_col)
+        models = est.fitMultiple(train, [{est.k: k} for k in ks])
+        failed = threading.Event()
+
+        def fit_next():
+            if failed.is_set():
+                return None
+            try:
+                index, model = next(models)
+            except BaseException:
+                failed.set()
+                raise
+            return index, float(model.summary.trainingCost)
+
+        task = inheritable_thread_target(df.sparkSession)(fit_next)
+        costs: list[float | None] = [None] * len(ks)
+        pool = ThreadPool(min(len(ks), df.sparkSession.sparkContext.defaultParallelism))
+        try:
+            for done in pool.imap_unordered(lambda f: f(), [task] * len(ks)):
+                if done is not None:  # None: skipped after another fit failed
+                    index, cost = done
+                    costs[index] = cost
+        finally:
+            # in-flight fits end before the sample is released
+            pool.close()
+            pool.join()
+        return [ElbowPoint(k=k, cost=c) for k, c in zip(ks, costs)]
     finally:
         train.unpersist()
 

@@ -1820,8 +1820,12 @@ def ann_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint phase as back-to-back sub-second jobs separated by
     # driver gaps).  Two driver threads submit them concurrently;
     # values are unchanged (checkpoints are materializations, and each
-    # thread builds an independent plan).
+    # thread builds an independent plan).  Both targets are wrapped in
+    # inheritable_thread_target so the caller's job group, local
+    # properties and tags cover the checkpoint jobs too.
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     def _build_per():
         return bm25_per_term(
@@ -1839,9 +1843,10 @@ def ann_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
+    _inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_per = _pool.submit(_build_per)
-        _f_corpus = _pool.submit(_build_corpus)
+        _f_per = _pool.submit(_inherit(_build_per))
+        _f_corpus = _pool.submit(_inherit(_build_corpus))
         per = _f_per.result()
         corpus = _f_corpus.result()
     top1 = grouped_topk(

@@ -186,6 +186,24 @@ def test_ann_eval_metrics_shape_and_bounds(spark):
     assert all(terms == set(_EVAL_TERMS) for terms in by_arm.values())
 
 
+def test_ann_eval_metrics_build_jobs_keep_caller_job_group(spark):
+    """The two checkpoints ann_eval_metrics builds on worker threads run
+    under the caller's job group: no job of the build escapes it."""
+    from big_data_co2_emission_analysis_spark.queries.text_queries import ann_eval_metrics
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("ann-eval-build", "ann_eval_metrics build")
+    try:
+        ann_eval_metrics(spark, "/root/testdata/sf0.001")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup("ann-eval-build")
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
 def test_multi_arm_metrics_match_per_arm_calls(spark):
     """retrieval_metrics_multi must be a pure refactor of N per-arm
     retrieval_metrics calls (ideal/n_rel computed once instead of per
