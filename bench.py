@@ -27,10 +27,10 @@ per-query number is the warm MEDIAN (round-4 fix: single-shot warm
 numbers swung 2.3x round-over-round on unchanged code -- JIT/GC
 interleaving noise -- so medians are the only comparable statistic);
 all iterations plus the IQR go to BENCH_DETAIL.json under
-"queries_iters" / "queries_iqr".  `spark.catalog.clearCache()` runs
-between every iteration so any operator-internal persist (e.g. the
-banded-LSH shingle base) is recomputed in each timed run -- warm
-means warm CODE, not warm data.
+"queries_iters" / "queries_iqr".  `session.release_pinned` runs
+between every iteration so any operator-internal persist or
+checkpoint (e.g. the banded-LSH shingle base) is recomputed in each
+timed run -- warm means warm CODE, not warm data.
 """
 
 from __future__ import annotations
@@ -166,7 +166,7 @@ HEADLINE = [
 
 def main() -> None:
     from big_data_co2_emission_analysis_spark.queries import all_queries
-    from big_data_co2_emission_analysis_spark.session import get_session
+    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -274,34 +274,22 @@ def main() -> None:
         return round(s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2, 3)
 
     def clear_all_caches() -> None:
-        # drop operator-internal persisted data so every warm run redoes
-        # ALL data work and only reuses compiled code.  clearCache() only
-        # drops SQL-catalog entries; RDD-level caches (eager
-        # localCheckpoints from connected_components / deterministic ML)
-        # are invisible to it and would accumulate across iterations, so
-        # sweep them via the JavaSparkContext map as well.
-        spark.catalog.clearCache()
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for rdd in list(jmap.values()):
-                rdd.unpersist(False)
-        except Exception:
-            pass  # py4j surface moved; catalog clear still ran
-        try:
-            # Force a JVM GC so ContextCleaner promptly releases dead
-            # shuffle files/metadata from the previous execution.  Spark
-            # itself only forces one every 30 min
-            # (spark.cleaner.periodicGC.interval), and on a large driver
-            # heap (32g at sf10) ordinary GC never fires -- measured
-            # effect of skipping this: after ~200 executions the
-            # shuffle-heaviest query (ngram_jaccard_pairs, sized
-            # 319-partition exchanges) crept 47->89->100 s across its
-            # own warm iterations in the full sf10 bench while running
-            # flat at ~34 s in a fresh JVM.  Runs outside the timed
-            # region.
-            spark._jvm.System.gc()
-        except Exception:
-            pass
+        # drop operator-internal persisted data (SQL caches AND
+        # RDD-level localCheckpoint blocks) so every warm run redoes ALL
+        # data work and only reuses compiled code
+        release_pinned(spark)
+        # Force a JVM GC so ContextCleaner promptly releases dead
+        # shuffle files/metadata from the previous execution.  Spark
+        # itself only forces one every 30 min
+        # (spark.cleaner.periodicGC.interval), and on a large driver
+        # heap (32g at sf10) ordinary GC never fires -- measured
+        # effect of skipping this: after ~200 executions the
+        # shuffle-heaviest query (ngram_jaccard_pairs, sized
+        # 319-partition exchanges) crept 47->89->100 s across its
+        # own warm iterations in the full sf10 bench while running
+        # flat at ~34 s in a fresh JVM.  Runs outside the timed
+        # region.
+        spark._jvm.System.gc()
 
     for name in HEADLINE:
         cold_times[name] = run(name)

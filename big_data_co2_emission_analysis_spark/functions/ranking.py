@@ -48,14 +48,9 @@ def _bm25_scored_frame(
     the matched tokens (|terms| is query-sized, so the array filter
     drops ~every token), eagerly checkpointed: ~24 B/doc, linear --
     the curated_corpus_v4 single-build pattern.  Build-time side
-    effect for plan-only consumers as documented there.
-
-    Lifetime note (ADVICE r12): each invocation pins one RDD block
-    (~24 B/doc) for process lifetime unless released -- invisible to
-    ``spark.catalog.clearCache()``.  Long-lived sessions issuing many
-    BM25 queries should sweep via ``sc._jsc.getPersistentRDDs()`` +
-    ``unpersist`` between queries, exactly as bench.py /
-    tools/check_oracle.py / tools/isolate_measure.py already do."""
+    effect for plan-only consumers as documented there.  The
+    checkpoint pins one block per call; ``session.release_pinned``
+    frees it."""
     base = docs.select(
         F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("__toks")
     )

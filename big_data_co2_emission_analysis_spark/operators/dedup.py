@@ -27,22 +27,6 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ._cache import CacheRegistry
-
-#: frames persisted by the minhash family (signatures, candidate pairs,
-#: verification shingles) -- lazily materialized by the CALLER's action,
-#: so the builders cannot unpersist them; sweep between invocations
-#: with :func:`release_minhash_caches` (see operators/_cache.py)
-_MINHASH_CACHES = CacheRegistry()
-
-
-def release_minhash_caches() -> int:
-    """Unpersist every cache the minhash builders registered in this
-    session; returns the count released.  Call between invocations in
-    long sessions (oracle sweeps, bench loops) -- results already
-    collected are unaffected, and a re-read just recomputes lineage."""
-    return _MINHASH_CACHES.release()
-
 
 def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """Exact duplicate removal -- ``dropDuplicates`` (hash shuffle on the
@@ -182,12 +166,16 @@ def simhash64_frame(
     Kernel shape (measured, sf10 microbench per 10k-doc batch): the
     obvious ``unpackbits`` -> ``cumsum(axis=0)`` segmented vote walks
     the (S, 64) bit matrix column-strided and ran 2.2 s/batch -- SLOWER
-    than the JVM HOF it replaces; per-BIT ``(h >> b) & 1`` +
-    1-D ``np.add.reduceat`` keeps every pass contiguous and runs
-    0.12 s/batch (18x).  ``reduceat`` quirks are neutralized after the
-    fact: rows with zero shingles (empty segments return an arbitrary
-    element, trailing ones would index out of range) are clamped and
-    zeroed via the segment-length vector.
+    than the JVM HOF it replaces; per-BIT ``(h >> b) & 1`` + a 1-D
+    segmented sum keeps every pass contiguous and ran 0.12 s/batch
+    (18x, measured with ``np.add.reduceat``).  The segmented sum is
+    the difference of a 1-D exclusive prefix sum at the segment
+    bounds, so zero-shingle docs (empty segments, anywhere in the
+    chunk) count exactly 0 and never shift a neighbour's sum --
+    ``reduceat`` cannot express an empty segment, and its clamped
+    starts dropped the last shingle of a doc followed by empty ones.
+    The prefix sum costs ~1.5x ``reduceat`` per bit pass (numpy
+    microbench, 1M shingles in 10k docs, 4-vCPU VM: 0.52 vs 0.33 s).
 
     ``chunk_shingles`` bounds the kernel's per-pass working set
     (~10 B/shingle transient) and is exercised down to 1 by tests.
@@ -225,14 +213,12 @@ def simhash64_frame(
                 if len(v):
                     u = v.view(np.uint64)
                     cnt = seg[1:] - seg[:-1]
-                    # clamp trailing empty-segment starts into range;
-                    # their garbage rows are zeroed via cnt below
-                    starts = np.minimum(seg[:-1], len(v) - 1)
                     ones = np.empty((hi - lo, 64), dtype=np.int64)
+                    c = np.zeros(len(v) + 1, dtype=np.int64)  # exclusive prefix sum
                     for b in range(64):
                         x = ((u >> np.uint64(b)) & np.uint64(1)).astype(np.int64)
-                        ones[:, b] = np.add.reduceat(x, starts)
-                    ones[cnt == 0] = 0
+                        np.cumsum(x, out=c[1:])
+                        ones[:, b] = c[seg[1:]] - c[seg[:-1]]
                     # votes = 2*ones - cnt; bit set iff votes > 0
                     maj = (2 * ones > cnt[:, None]).astype(np.uint8)
                     out[lo:hi] = (
@@ -304,7 +290,6 @@ def ngram_jaccard_pairs(
     min_jaccard: float = 0.5,
     max_df: int | None = None,
     agg_partitions: int | None = None,
-    shingle_frame: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via an inverted index:
     explode shingles, group postings by shingle, expand ordered doc
@@ -358,23 +343,14 @@ def ngram_jaccard_pairs(
     state.  Default None keeps the session-default plan (correct and
     spill-free through sf1).
 
-    ``shingle_frame`` (r10, the shared-shingle-stream option): a
-    caller-built ``(id, shingles)`` frame -- ``word_shingles`` output,
-    empty arrays filtered -- consumed INSTEAD of shingling ``df``.
-    Lets a pipeline that runs several shingle consumers (this + the
-    banded MinHash) pay the normalize+shingle map once, typically via
-    a caller-persisted frame.  A/B'd at sf10 (tools/shingle_share_ab.py)
-    before wiring anywhere; the registry queries run standalone and
-    keep the stock build.
+    A caller-built shared shingle frame (one shingling for this and
+    the banded MinHash) was measured at sf10 and rejected: SCALING.md
+    "Shared shingle stream A/B".
     """
-    shingled = (
-        shingle_frame
-        if shingle_frame is not None
-        else df.select(
-            F.col(id_col).alias("id"),
-            word_shingles(text_col, shingle_n).alias("shingles"),
-        ).filter(F.size("shingles") > 0)
-    )
+    shingled = df.select(
+        F.col(id_col).alias("id"),
+        word_shingles(text_col, shingle_n).alias("shingles"),
+    ).filter(F.size("shingles") > 0)
     # the posting stream is keyed by the 16-byte BINARY md5 of the
     # shingle, not the shingle string itself (the substring family's
     # r8 lesson: the key is most of each posting row's width on the
@@ -469,7 +445,6 @@ def _banded_postings(
     shingle_n: int,
     persist_signed: bool = True,
     slim: bool = True,
-    shingle_frame: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared front half of banded MinHash: returns (base, signed,
     banded) where base is the LAZY (id, __sh shingle-set) frame,
@@ -481,7 +456,7 @@ def _banded_postings(
     candidate pair instead, which also computes each pair's
     est_jaccard once rather than once per colliding band).
 
-    ``persist_signed=False`` skips the signature persist+registry entry
+    ``persist_signed=False`` skips the signature persist
     for callers that consume only ``banded`` (bucket_stats) -- the
     cache write would be pure cost there (r9 ADVICE).
 
@@ -515,14 +490,9 @@ def _banded_postings(
     # shingles -- minhash_banded_pairs now semi-join-prunes the corpus
     # to candidate ids and re-shingles just those (~candidates, not
     # rows).  The signature chain streams through this frame once.
-    if shingle_frame is not None:
-        # shared-shingle-stream option: caller-built (id, shingles),
-        # same frame ngram_jaccard_pairs accepts
-        base = shingle_frame.select("id", F.col("shingles").alias("__sh"))
-    else:
-        base = df.select(
-            F.col(id_col).alias("id"), word_shingles(text_col, shingle_n).alias("__sh")
-        ).filter(F.size("__sh") > 0)
+    base = df.select(
+        F.col(id_col).alias("id"), word_shingles(text_col, shingle_n).alias("__sh")
+    ).filter(F.size("__sh") > 0)
     hashed = base.select("id", F.explode("__sh").alias("__s")).select(
         "id", F.xxhash64("__s").bitwiseAND(F.lit(0xFFFFFFFF).cast("long")).alias("__h")
     )
@@ -544,9 +514,8 @@ def _banded_postings(
         # consumed by the bucket stream AND both sides of the
         # est-jaccard join; persist once instead of re-running the
         # explode + k-way min aggregation per consumer (~140 MB at
-        # sf10 -- signature-table-sized, linear in docs); registered
-        # for release_minhash_caches
-        signed = _MINHASH_CACHES.track(signed.persist(StorageLevel.MEMORY_AND_DISK))
+        # sf10 -- signature-table-sized, linear in docs)
+        signed = signed.persist(StorageLevel.MEMORY_AND_DISK)
     band_structs = F.explode(
         F.transform(
             F.sequence(F.lit(0), F.lit(num_bands - 1)),
@@ -614,7 +583,6 @@ def minhash_banded_pairs(
     max_bucket_size: int | None = 256,
     prune_verify: bool = True,
     slim_postings: bool = True,
-    shingle_frame: DataFrame | None = None,
     broadcast_max_ids: int = 4_000_000,
 ) -> DataFrame:
     """Hand-rolled MinHash + LSH banding (Broder): shingle -> k minhash
@@ -695,12 +663,9 @@ def minhash_banded_pairs(
     both knobs on the same corpus-byte sizing -- the
     ``distinct_parts_per_flag`` None-means-stock pattern.
 
-    ``shingle_frame`` (r10): a caller-built ``(id, shingles)`` frame
-    (the same one ``ngram_jaccard_pairs`` accepts) consumed instead of
-    shingling ``df`` -- for pipelines running several shingle
-    consumers over one corpus.  The caller owns its persistence;
-    verification joins it (semi-pruned under ``prune_verify``) instead
-    of re-shingling.  A/B'd at sf10 in tools/shingle_share_ab.py.
+    A caller-built shared shingle frame (one shingling for this and
+    ``ngram_jaccard_pairs``) was measured at sf10 and rejected:
+    SCALING.md "Shared shingle stream A/B".
 
     ``broadcast_max_ids`` (r12, slim path only): envelope for the
     MEASURED broadcast of the candidate-id spine into the signature
@@ -712,11 +677,10 @@ def minhash_banded_pairs(
     if not slim_postings:
         return _minhash_banded_pairs_small(
             df, id_col, text_col, num_hashes, num_bands, shingle_n,
-            min_jaccard, max_bucket_size, shingle_frame=shingle_frame,
+            min_jaccard, max_bucket_size,
         )
     base, signed, banded = _banded_postings(
-        df, id_col, text_col, num_hashes, num_bands, shingle_n,
-        shingle_frame=shingle_frame,
+        df, id_col, text_col, num_hashes, num_bands, shingle_n
     )
 
     grouped = (
@@ -733,7 +697,7 @@ def minhash_banded_pairs(
     # signature rode every bucket posting)
     from pyspark import StorageLevel
 
-    pairs = _MINHASH_CACHES.track(
+    pairs = (
         grouped.select(
             F.explode(
                 F.flatten(
@@ -782,7 +746,7 @@ def minhash_banded_pairs(
     # and the signature scan filters in place with zero exchange, above
     # it (degenerate corpus: candidate set itself corpus-scale) the
     # shuffled semi is the correct fallback.
-    pair_ids = _MINHASH_CACHES.track(
+    pair_ids = (
         pairs.select(F.explode(F.array("id_a", "id_b")).alias("id"))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -813,7 +777,7 @@ def minhash_banded_pairs(
     # shuffle_hash on the candidate side: every side of this chain is
     # candidate-sized after the semi-filter and never needs sorting
     # for a 1:1 probe
-    cand = _MINHASH_CACHES.track(
+    cand = (
         pairs.hint("shuffle_hash")
         .join(sig_a, "id_a")
         .hint("shuffle_hash")
@@ -840,32 +804,25 @@ def minhash_banded_pairs(
         # (measured at sf30: a 347.6 MB corpus text exchange against a
         # 1 MB spine).
         ids = pair_ids
-        if shingle_frame is not None:
-            # shared stream: semi-prune the caller's frame (already
-            # shingled, typically caller-persisted) -- no re-shingle
-            sh = base.join(ids, "id", "leftsemi")
-        else:
-            # EAGER checkpoint for the same reason as `pairs`: the two
-            # verify legs (sh_a / sh_b) are independent branches, and a
-            # lazy persist let both re-run the corpus semi-prune +
-            # re-shingle (sf30 ledger: two ~122 MB shingle exchanges
-            # from two full corpus scans).  The checkpoint job also
-            # materializes `cand`'s cache en route, so the final probe
-            # never races it either.
-            sh = _MINHASH_CACHES.track(
-                df.join(ids, F.col(id_col) == ids["id"], "leftsemi")
-                .select(
-                    F.col(id_col).alias("id"),
-                    word_shingles(text_col, shingle_n).alias("__sh"),
-                )
-                .localCheckpoint(eager=True)
+        # EAGER checkpoint for the same reason as `pairs`: the two
+        # verify legs (sh_a / sh_b) are independent branches, and a
+        # lazy persist let both re-run the corpus semi-prune +
+        # re-shingle (sf30 ledger: two ~122 MB shingle exchanges
+        # from two full corpus scans).  The checkpoint job also
+        # materializes `cand`'s cache en route, so the final probe
+        # never races it either.
+        sh = (
+            df.join(ids, F.col(id_col) == ids["id"], "leftsemi")
+            .select(
+                F.col(id_col).alias("id"),
+                word_shingles(text_col, shingle_n).alias("__sh"),
             )
-    elif shingle_frame is not None:
-        sh = base  # caller owns the shared frame's persistence
+            .localCheckpoint(eager=True)
+        )
     else:
         # small corpus: a corpus-wide shingle cache is trivial and the
         # prune chain's extra stages would dominate (docstring numbers)
-        sh = _MINHASH_CACHES.track(base.persist(StorageLevel.MEMORY_AND_DISK))
+        sh = base.persist(StorageLevel.MEMORY_AND_DISK)
     sh_a = sh.select(F.col("id").alias("id_a"), F.col("__sh").alias("__sh_a"))
     sh_b = sh.select(F.col("id").alias("id_b"), F.col("__sh").alias("__sh_b"))
     inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
@@ -889,7 +846,6 @@ def _minhash_banded_pairs_small(
     shingle_n: int,
     min_jaccard: float,
     max_bucket_size: int | None,
-    shingle_frame: DataFrame | None = None,
 ) -> DataFrame:
     """The ``slim_postings=False`` body (the r8 shape, kept verbatim as
     the small-corpus branch): signatures ride the bucket postings,
@@ -902,7 +858,7 @@ def _minhash_banded_pairs_small(
 
     base, _, banded = _banded_postings(
         df, id_col, text_col, num_hashes, num_bands, shingle_n,
-        persist_signed=False, slim=False, shingle_frame=shingle_frame,
+        persist_signed=False, slim=False,
     )
     grouped = (
         banded.groupBy("band", "bucket")
@@ -945,10 +901,7 @@ def _minhash_banded_pairs_small(
         .agg(F.first("est_jaccard").alias("est_jaccard"))
         .filter(F.col("est_jaccard") >= max(0.0, min_jaccard - 3 * stderr))
     )
-    if shingle_frame is not None:
-        sh = base  # caller owns the shared frame's persistence
-    else:
-        sh = _MINHASH_CACHES.track(base.persist(StorageLevel.MEMORY_AND_DISK))
+    sh = base.persist(StorageLevel.MEMORY_AND_DISK)
     sh_a = sh.select(F.col("id").alias("id_a"), F.col("__sh").alias("__sh_a"))
     sh_b = sh.select(F.col("id").alias("id_b"), F.col("__sh").alias("__sh_b"))
     inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
@@ -1044,49 +997,27 @@ def connected_components(
     ``Dataset.unpersist`` CANNOT release (unpersist only talks to the
     SQL CacheManager; a localCheckpoint's persistence lives on the
     underlying RDD -- empirically, after ``df.localCheckpoint();
-    df.unpersist(True)`` the RDD is still in
-    ``sc.getPersistentRDDs``).  So the loop reads each round's
-    checkpoint RDD id straight off the dataset (the analyzed plan is a
-    ``LogicalRDD`` whose rdd IS the persisted one; a global
-    persistent-set diff is only the fallback, and is the one path that
-    could misattribute a concurrently-persisted RDD) and unpersists
-    the PREVIOUS round's id through the JavaRDD handle once the
-    convergence probe (its last reader) has run -- long-running
-    sessions hold exactly one round's block, not one per round.  The FINAL round's block backs
-    the returned DataFrame and intentionally stays; its ids are
-    surfaced as ``stats_out["checkpoint_rdd_ids"]`` so callers that
-    outlive the result can release it the same way.
+    df.unpersist(True)`` the RDD is still in the persistent-RDD map).
+    So the loop reads each round's checkpoint RDD id straight off the
+    dataset (the analyzed plan is a ``LogicalRDD`` whose rdd IS the
+    persisted one -- no misattribution if another thread persists
+    something concurrently) and unpersists the PREVIOUS round's id
+    through the JavaRDD handle once the convergence probe (its last
+    reader) has run -- long-running sessions hold exactly one round's
+    block, not one per round.  The
+    FINAL round's block backs the returned DataFrame and intentionally
+    stays; its ids are surfaced as ``stats_out["checkpoint_rdd_ids"]``
+    so callers that outlive the result can release it the same way
+    (or all at once with ``session.release_pinned``).
     """
     sc = pairs.sparkSession.sparkContext
 
-    def _persistent_ids() -> set:
-        try:
-            return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-        except Exception:  # pragma: no cover - py4j surface moved
-            return set()
-
-    def _checkpoint_rdd_ids(df: DataFrame, before: set) -> set:
-        # identify THIS dataset's checkpoint block directly: after
-        # localCheckpoint the analyzed plan is a LogicalRDD whose rdd
-        # IS the persisted one (empirically its id is exactly the
-        # getPersistentRDDs delta) -- no misattribution if another
-        # thread persists something concurrently (ADVICE r6 low).
-        try:
-            return {df._jdf.queryExecution().analyzed().rdd().id()}
-        except Exception:  # pragma: no cover - py4j surface moved
-            # fallback: set-diff of global persistent state; correct
-            # only when no concurrent query persists inside the window
-            return _persistent_ids() - before
-
     def _release_rdd_ids(ids: set) -> None:
-        try:
-            jmap = sc._jsc.getPersistentRDDs()
-            for rid in ids:
-                jrdd = jmap.get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
-        except Exception:  # pragma: no cover - py4j surface moved
-            pass
+        jmap = sc._jsc.getPersistentRDDs()
+        for rid in ids:
+            jrdd = jmap.get(rid)
+            if jrdd is not None:
+                jrdd.unpersist(False)
 
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -1120,9 +1051,8 @@ def connected_components(
             new_labels.join(parent, "comp")
             .select("id", F.least("comp", "__gp").alias("comp"))
         )
-        before = _persistent_ids()
         new_labels = new_labels.localCheckpoint(eager=True)  # cut lineage per round
-        new_ids = _checkpoint_rdd_ids(new_labels, before)
+        new_ids = {new_labels._jdf.queryExecution().analyzed().rdd().id()}
         changed = (
             labels.alias("o")
             .join(new_labels.alias("n"), "id")

@@ -47,17 +47,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..queries._exact import fx, unfx
-from ._cache import CacheRegistry
-
-#: count tables persisted by score_docs_bigram_lm (vocabulary-bounded);
-#: sweep between invocations with :func:`release_lm_caches`
-_LM_CACHES = CacheRegistry()
-
-
-def release_lm_caches() -> int:
-    """Unpersist every bigram-count cache this module registered in the
-    session; returns the count released (operators/_cache.py contract)."""
-    return _LM_CACHES.release()
 
 #: beginning-of-sentence marker.  KNOWN CONFLATION: a document whose
 #: text contains a literal whitespace-delimited '<s>' token merges it
@@ -154,9 +143,7 @@ def score_docs_bigram_lm(
     one row per distinct bigram -- vocabulary-bounded, never
     corpus-bounded -- and the count it yields is reused as the
     measured broadcast gate below.  (The cache outlives the call --
-    the returned frame is lazy -- so it is registered for
-    :func:`release_lm_caches`; sweep between invocations in long
-    sessions.)
+    the returned frame is lazy; ``session.release_pinned`` frees it.)
 
     ``ctx_join`` gates how the count/context tables (one row per
     distinct bigram/token -- vocabulary-sized, so fine at fixture
@@ -249,9 +236,7 @@ def score_docs_bigram_lm(
         # docstring): without the cache its three consumers prune the
         # aggregate differently and the corpus-sized explode+agg runs
         # three times; the forced count doubles as the broadcast gate.
-        counts = _LM_CACHES.track(
-            big.groupBy("v", "w").agg(F.count(F.lit(1)).alias("c_vw")).persist()
-        )
+        counts = big.groupBy("v", "w").agg(F.count(F.lit(1)).alias("c_vw")).persist()
         # one job forces the cache AND measures the envelope: row count
         # plus actual key octets (the byte gate -- row count alone says
         # nothing about 1M bigrams of long tokens)

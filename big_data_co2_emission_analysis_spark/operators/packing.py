@@ -73,8 +73,8 @@ def concat_split_pack(
     scale, AND the internal DISK_ONLY persist of the 2-column base
     projection deliberately stays alive for the session (the returned
     plan references it; releasing it would hand back an un-cached
-    lineage that re-samples the exchange) -- plan-inspection callers
-    that care should ``spark.catalog.clearCache()`` afterwards.
+    lineage that re-samples the exchange) -- ``session.release_pinned``
+    frees it.
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")

@@ -54,9 +54,7 @@ def exact_quantiles(
     and returns the (keys x quantiles, control-plane-bounded) result as
     a driver-local relation: it is computed eagerly, the persisted
     frame is released before returning, and NO cached RDD outlives the
-    call (an eager ``localCheckpoint`` here used to leak one pinned
-    RDD per invocation -- invisible to ``spark.catalog.clearCache()``,
-    which only drops SQL-catalog entries).  Pass ``False`` ONLY to
+    call.  Pass ``False`` ONLY to
     inspect the un-truncated logical plan -- in that mode the returned
     frame re-executes the range exchange on collection, which can
     re-sample different partition boundaries than the counts job.

@@ -77,7 +77,8 @@ def scd2_apply(
     on estimates), and above ``broadcast_max_keys`` the plan falls back
     to exactly the previous shuffle shape.  Values are unchanged on
     both sides of the gate (a checkpoint is a materialization; a
-    broadcast is a join strategy).
+    broadcast is a join strategy).  The checkpoint pins one block per
+    call until ``session.release_pinned`` frees it.
     """
     closed = dim.filter(F.col("valid_to").isNotNull())
     open_rows = dim.filter(F.col("valid_to").isNull())

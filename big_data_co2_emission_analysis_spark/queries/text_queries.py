@@ -1806,8 +1806,8 @@ def ann_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BM25 lineage -- without a cut, building three runs + qrels
     # re-tokenizes the corpus ~10x.  localCheckpoint(eager=True) is the
     # curated_corpus_v4 single-build pattern: materialize once at build
-    # time, every consumer reads blocks (bench.py, isolate_measure.py
-    # and check_oracle.py all sweep the blocks between queries).
+    # time, every consumer reads blocks (``session.release_pinned``
+    # frees them).
     # Values are unchanged by construction -- a checkpoint is a
     # materialization, not a plan.  SIDE EFFECT for plan-only
     # consumers: merely BUILDING this DataFrame (explain/dump_plans)

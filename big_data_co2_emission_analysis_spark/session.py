@@ -62,6 +62,24 @@ def get_session(
     return spark
 
 
+def release_pinned(spark: SparkSession) -> int:
+    """Release every block the session's queries left pinned; returns
+    how many persistent RDDs were held before the call.
+
+    ``clearCache`` drops the SQL CacheManager entries (``persist``),
+    but an eager ``localCheckpoint`` persists at the RDD level, where
+    ``Dataset.unpersist`` cannot reach it -- those are released through
+    the JavaSparkContext's persistent-RDD map.  Call it between queries
+    in a long-lived session; a DataFrame built before the call must not
+    be read after it (its checkpoint blocks are gone)."""
+    jsc = spark.sparkContext._jsc
+    n = int(jsc.getPersistentRDDs().size())
+    spark.catalog.clearCache()
+    for rdd in list(jsc.getPersistentRDDs().values()):
+        rdd.unpersist(False)
+    return n
+
+
 @_contextmanager
 def arrow_transfer(spark: SparkSession):
     """Force Arrow for a pandas-boundary transfer regardless of the
@@ -86,8 +104,7 @@ def arrow_transfer(spark: SparkSession):
     (unfixable without a per-thread conf, which Spark does not offer);
     the engine's own callers all route through here, and the
     single-driver-thread bench/driver protocol is the documented
-    operating mode (same assumption as connected_components'
-    persistent-RDD sweep, ADVICE r6)."""
+    operating mode."""
     key = "spark.sql.execution.arrow.pyspark.enabled"
     with _ARROW_CONF_LOCK:
         try:

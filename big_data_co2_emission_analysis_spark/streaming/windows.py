@@ -472,6 +472,9 @@ def incremental_dedup_batch(
 
     if confirm not in ("shuffle", "broadcast"):
         raise ValueError(f"confirm must be shuffle|broadcast, got {confirm!r}")
+    if not -(1 << 31) <= batch_id < (1 << 31):
+        # the manifest is read back with batch_id typed int (below)
+        raise ValueError(f"batch_id must fit a 32-bit int, got {batch_id}")
     spark = batch_df.sparkSession
     try:
         # explicit schema (r13): the manifest's shape is fixed by
@@ -479,7 +482,9 @@ def incremental_dedup_batch(
         # hive partition), so per-batch footer/schema inference is pure
         # driver latency -- at 3 batches it was one listing + footer
         # read per batch in the job-gap ledger.  A missing manifest
-        # path still raises (first batch), keeping base_exists=False.
+        # path still raises (first batch), keeping base_exists=False;
+        # a manifest directory holding only _SUCCESS reads as empty
+        # with base_exists=True (inference would have raised there).
         base = (
             spark.read.schema("fingerprint string, batch_id int")
             .parquet(manifest_path)

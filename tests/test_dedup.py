@@ -112,6 +112,34 @@ def test_simhash_frame_parity_tiny_chunk(spark):
     assert got == expected
 
 
+@pytest.mark.parametrize(
+    "tail",
+    [[""], ["   \t\n "], [None], ["single"], ["", None, "  ", "word", ""]],
+    ids=["empty", "whitespace", "null", "single_word", "mixed"],
+)
+def test_simhash_frame_parity_trailing_shingleless_docs(spark, tail):
+    """Zero-shingle docs AFTER the last non-empty doc of a kernel chunk
+    must not shift that doc's vote: one partition (so one Arrow batch,
+    rows in order) whose last rows have no bigram shingles, checked
+    against the Column form at the default chunk and at chunk 1."""
+    from big_data_co2_emission_analysis_spark.operators.dedup import simhash64_frame
+
+    texts = [BASE, None, OTHER, "", NEAR] + tail
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).coalesce(1)
+    expected = {
+        r["doc_id"]: r["s"]
+        for r in df.select("doc_id", simhash64("text").alias("s")).collect()
+    }
+    for chunk in (1 << 18, 1):
+        got = {
+            r["doc_id"]: r["simhash"]
+            for r in simhash64_frame(df, chunk_shingles=chunk).collect()
+        }
+        assert got == expected, chunk
+
+
 def test_ngram_jaccard_exact_values(corpus):
     pairs = ngram_jaccard_pairs(corpus, "doc_id", "text", min_jaccard=0.3)
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
@@ -426,43 +454,49 @@ def test_incremental_dedup_single_shuffle_chain(spark):
     assert "Exchange" not in between, "window re-exchanged after the fp join"
 
 
-def test_minhash_cache_registry_release(corpus, spark):
-    """minhash builders persist intermediates (signatures, candidates,
-    shingles) that only the caller's action materializes; the module
-    registry must release them on demand, and the bucket_stats path --
-    which consumes only the slim postings -- must register NOTHING
-    (r9 ADVICE: it used to pay a signature cache write it never read)."""
+def _pinned(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_minhash_bucket_stats_pins_nothing(corpus, spark):
+    """The bucket_stats path consumes only the slim postings, so it must
+    persist NOTHING (r9 ADVICE: it used to pay a signature cache write
+    it never read)."""
     from big_data_co2_emission_analysis_spark.operators.dedup import (
         minhash_banded_bucket_stats,
-        minhash_banded_pairs,
-        release_minhash_caches,
     )
+    from big_data_co2_emission_analysis_spark.session import release_pinned
 
-    release_minhash_caches()  # clean slate from earlier tests
+    release_pinned(spark)  # clean slate from earlier tests
     minhash_banded_bucket_stats(corpus, "doc_id", "text").collect()
-    assert release_minhash_caches() == 0
-
-    minhash_banded_pairs(corpus, "doc_id", "text", min_jaccard=0.3).collect()
-    sc = spark.sparkContext
-    before = sc._jsc.getPersistentRDDs().size()
-    assert release_minhash_caches() >= 2  # signed + cand (+ shingles)
-    assert sc._jsc.getPersistentRDDs().size() < before
+    assert _pinned(spark) == 0
 
 
-def test_lm_cache_registry_release(spark):
+def test_release_pinned_frees_minhash_and_lm_caches(corpus, spark):
+    """The minhash builders persist/checkpoint intermediates (signatures,
+    candidates, shingles) and the bigram LM persists its count table;
+    all outlive the call, and release_pinned must free every one."""
+    from big_data_co2_emission_analysis_spark.operators.dedup import (
+        minhash_banded_pairs,
+    )
     from big_data_co2_emission_analysis_spark.operators.ngram_lm import (
-        release_lm_caches,
         score_docs_bigram_lm,
     )
+    from big_data_co2_emission_analysis_spark.session import release_pinned
 
-    release_lm_caches()
+    release_pinned(spark)
+    minhash_banded_pairs(corpus, "doc_id", "text", min_jaccard=0.3).collect()
+    assert release_pinned(spark) >= 1
+    assert _pinned(spark) == 0
+
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i}") for i in range(30)],
         "doc_id long, text string",
     )
     score_docs_bigram_lm(docs).collect()
-    assert release_lm_caches() == 1
-    assert release_lm_caches() == 0
+    assert release_pinned(spark) >= 1
+    assert _pinned(spark) == 0
+    assert release_pinned(spark) == 0
 
 
 def test_minhash_slim_and_small_shapes_value_identical(corpus):
@@ -472,7 +506,6 @@ def test_minhash_slim_and_small_shapes_value_identical(corpus):
     is computed (bucket expansion vs signature rejoin) cannot matter."""
     from big_data_co2_emission_analysis_spark.operators.dedup import (
         minhash_banded_pairs,
-        release_minhash_caches,
     )
 
     def rows(**kw):
@@ -485,55 +518,4 @@ def test_minhash_slim_and_small_shapes_value_identical(corpus):
 
     slim = rows(slim_postings=True, prune_verify=True)
     small = rows(slim_postings=False, prune_verify=False)
-    release_minhash_caches()
     assert small == slim and small
-
-
-def test_shared_shingle_frame_value_identical(corpus, spark):
-    """shingle_frame= (the r10 shared-shingle-stream option) must be
-    value-identical to the internal shingling for BOTH consumers, in
-    every shape combination."""
-    from pyspark.sql import functions as F
-
-    from big_data_co2_emission_analysis_spark.operators.dedup import (
-        minhash_banded_pairs,
-        ngram_jaccard_pairs,
-        word_shingles,
-    )
-
-    sh = (
-        corpus.select(F.col("doc_id").alias("id"), word_shingles("text", 3).alias("shingles"))
-        .filter(F.size("shingles") > 0)
-        .persist()
-    )
-    try:
-        for kw in (
-            dict(slim_postings=True, prune_verify=True),
-            dict(slim_postings=True, prune_verify=False),
-            dict(slim_postings=False, prune_verify=False),
-        ):
-            base = sorted(
-                tuple(r)
-                for r in minhash_banded_pairs(
-                    corpus, "doc_id", "text", min_jaccard=0.3, **kw
-                ).collect()
-            )
-            shared = sorted(
-                tuple(r)
-                for r in minhash_banded_pairs(
-                    corpus, "doc_id", "text", min_jaccard=0.3, shingle_frame=sh, **kw
-                ).collect()
-            )
-            assert shared == base and base, kw
-        ng_base = sorted(
-            tuple(r) for r in ngram_jaccard_pairs(corpus, "doc_id", "text").collect()
-        )
-        ng_shared = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(
-                corpus, "doc_id", "text", shingle_frame=sh
-            ).collect()
-        )
-        assert ng_shared == ng_base and ng_base
-    finally:
-        sh.unpersist()

@@ -117,3 +117,44 @@ def test_apply_late_update_inside_closed_history(spark):
     from big_data_co2_emission_analysis_spark.operators.scd2 import scd2_current
 
     assert scd2_current(merged).count() == 2
+
+
+def test_apply_batch_loop_leaves_nothing_pinned(spark, tmp_path):
+    """A long-lived CDC loop: every scd2_apply pins its late-key
+    checkpoint (one persistent RDD per batch, which Dataset.unpersist
+    cannot free), and release_pinned after each batch ends the loop
+    with nothing pinned.  The dimension round-trips through parquet,
+    as a stored dimension table would, so no frame reads a released
+    block."""
+    from big_data_co2_emission_analysis_spark.session import release_pinned
+
+    def pinned():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    schema = "k long, attr string, ts date"
+    release_pinned(spark)
+    scd2_build(
+        spark.createDataFrame([(1, "a", _d("2024-02-01")), (2, "x", _d("2024-02-01"))], schema),
+        ["k"],
+        "ts",
+    ).write.parquet(str(tmp_path / "dim0"))
+    batches = [
+        [(1, "b", _d("2024-03-01"))],
+        [(2, "w", _d("2024-01-01"))],  # late: before key 2's open row
+        [(1, "c", _d("2024-04-01")), (3, "n", _d("2024-04-01"))],
+    ]
+    for i, rows in enumerate(batches):
+        dim = spark.read.parquet(str(tmp_path / f"dim{i}"))
+        merged = scd2_apply(dim, spark.createDataFrame(rows, schema), ["k"], "ts")
+        merged.write.parquet(str(tmp_path / f"dim{i + 1}"))
+        assert pinned() == 1  # this batch's late-key checkpoint
+        assert release_pinned(spark) == 1
+        assert pinned() == 0
+    assert _rows(spark.read.parquet(str(tmp_path / "dim3"))) == [
+        (1, "a", "2024-02-01", "2024-03-01"),
+        (1, "b", "2024-03-01", "2024-04-01"),
+        (1, "c", "2024-04-01", "None"),
+        (2, "w", "2024-01-01", "2024-02-01"),
+        (2, "x", "2024-02-01", "None"),
+        (3, "n", "2024-04-01", "None"),
+    ]

@@ -649,6 +649,21 @@ def test_incremental_dedup_batch_replay_is_idempotent(spark, tmp_path):
     assert snap(manifest) == man_before, "replay changed the manifest"
 
 
+def test_incremental_dedup_batch_rejects_batch_id_beyond_int(spark, tmp_path):
+    """The manifest is read back with ``batch_id int``: an id past
+    2^31 - 1 would be written but never read back as prior history."""
+    from big_data_co2_emission_analysis_spark.streaming.windows import (
+        incremental_dedup_batch,
+    )
+
+    b = spark.createDataFrame([(1, "alpha")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="batch_id"):
+        incremental_dedup_batch(
+            b, 1 << 31, str(tmp_path / "manifest"), str(tmp_path / "out")
+        )
+    assert not (tmp_path / "out").exists()
+
+
 def test_incremental_dedup_broadcast_confirm_matches_exact(spark, tmp_path):
     """confirm='broadcast' (manifest scanned, never exchanged) must
     produce identical survivors/manifest to the default shuffle-join

@@ -36,29 +36,11 @@ def canon(rows, cols):
     return sorted(out)
 
 
-def sweep_persisted(spark) -> None:
-    """Release cached/checkpointed blocks between queries.
-
-    Several query builders eagerly ``localCheckpoint`` shared corpus-
-    scale frames at BUILD time (ann/bm25/PRF eval harnesses,
-    connected components); without this sweep those blocks pin
-    executor memory for the rest of a 228-query run and the sweep's
-    absence here (vs bench.py / isolate_measure.py, which both have
-    it) made this tool rely on GC/ContextCleaner timing."""
-    spark.catalog.clearCache()
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rdd in list(jmap.values()):
-            rdd.unpersist(False)
-    except Exception:
-        pass  # py4j surface moved; catalog clear still ran
-
-
 def main() -> int:
     import duckdb
 
     from big_data_co2_emission_analysis_spark.queries import all_queries
-    from big_data_co2_emission_analysis_spark.session import get_session
+    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -75,7 +57,7 @@ def main() -> int:
     for name, qd in sorted(qs.items()):
         if only and name not in only:
             continue
-        sweep_persisted(spark)
+        release_pinned(spark)
         t0 = time.time()
         try:
             sdf = qd.fn(spark, sf_dir)

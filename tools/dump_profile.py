@@ -38,7 +38,7 @@ def main() -> None:
         ensure_bucketed_tables,
         ensure_partitioned_orders,
     )
-    from big_data_co2_emission_analysis_spark.session import get_session
+    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PROFILE.md"
@@ -53,7 +53,7 @@ def main() -> None:
         m = collect_metrics_all_jobs(lambda: qs[name].fn(spark, sf_dir), spark=spark)
         sec = time.perf_counter() - t0
         rows.append((name, sec, m))
-        spark.catalog.clearCache()
+        release_pinned(spark)
         print(f"# {name}: {sec:.2f}s {m}", file=sys.stderr)
 
     out = [

@@ -1,9 +1,9 @@
 """Isolated re-measure of named registry queries under the quartiles
 protocol (PROFILE.md "Root cause" sections): fresh JVM, N warm
-iterations per query with ``spark.catalog.clearCache()`` + a
-``getPersistentRDDs()`` sweep between each, reporting the full series,
-the median, and one byte-metrics pass (scan/shuffle/spill) so a drift
-in wall-clock can be separated from a drift in work done.
+iterations per query with ``session.release_pinned`` between each,
+reporting the full series, the median, and one byte-metrics pass
+(scan/shuffle/spill) so a drift in wall-clock can be separated from a
+drift in work done.
 
     python tools/isolate_measure.py [--sf /root/testdata/sf0.1]
         [--iters 7] name [name ...]
@@ -33,28 +33,18 @@ def main() -> None:
 
     from big_data_co2_emission_analysis_spark.plans.metrics import collect_metrics_all_jobs
     from big_data_co2_emission_analysis_spark.queries import all_queries
-    from big_data_co2_emission_analysis_spark.session import get_session
+    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
 
     spark = get_session("isolate")
     spark.range(1000).selectExpr("sum(id)").collect()  # JVM warm-up
     qs = all_queries()
-    sc = spark.sparkContext
 
     def sweep() -> int:
-        spark.catalog.clearCache()
-        jmap = sc._jsc.getPersistentRDDs()
-        it = jmap.entrySet().iterator()
-        n = 0
-        while it.hasNext():
-            it.next().getValue().unpersist(True)
-            n += 1
-        try:
-            # match bench.py's protocol: force a JVM GC so the
-            # ContextCleaner releases dead shuffle state promptly
-            # (see bench.py for the measured creep this prevents)
-            spark._jvm.System.gc()
-        except Exception:
-            pass
+        n = release_pinned(spark)
+        # match bench.py's protocol: force a JVM GC so the
+        # ContextCleaner releases dead shuffle state promptly
+        # (see bench.py for the measured creep this prevents)
+        spark._jvm.System.gc()
         return n
 
     for name in args.names:

@@ -27,20 +27,11 @@ def main() -> None:
 
     from big_data_co2_emission_analysis_spark.plans.metrics import _drain_listener_bus
     from big_data_co2_emission_analysis_spark.queries import all_queries
-    from big_data_co2_emission_analysis_spark.session import get_session
+    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
 
     spark = get_session("job_timeline")
     spark.range(1000).selectExpr("sum(id)").collect()
     qs = all_queries()
-
-    def sweep() -> None:
-        spark.catalog.clearCache()
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for rdd in list(jmap.values()):
-                rdd.unpersist(False)
-        except Exception:
-            pass
 
     def run() -> float:
         t0 = time.perf_counter()
@@ -51,7 +42,7 @@ def main() -> None:
     if not args.no_warm:
         for _ in range(max(1, args.warmups)):
             run()  # compile/JIT off the clock, matching bench warm iterations
-            sweep()
+            release_pinned(spark)
 
     _drain_listener_bus(spark)
     store = spark.sparkContext._jsc.sc().statusStore()

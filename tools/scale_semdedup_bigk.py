@@ -26,7 +26,7 @@ from pyspark.sql import functions as F  # noqa: E402
 def main() -> None:
     from big_data_co2_emission_analysis_spark.plans.metrics import collect_metrics
     from big_data_co2_emission_analysis_spark.queries import mlops
-    from big_data_co2_emission_analysis_spark.session import get_session
+    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
 
     sf_dirs = sys.argv[1:] or [
         "/root/testdata/sf0.1",
@@ -40,7 +40,7 @@ def main() -> None:
         stats = mlops.semdedup_bigk_cluster_stats(spark, sf_dir).collect()[0]
         iters = []
         for _ in range(3):
-            spark.catalog.clearCache()
+            release_pinned(spark)
             t0 = time.perf_counter()
             mlops.semdedup_pairs_bigk(spark, sf_dir).write.format("noop").mode(
                 "overwrite"

@@ -41,7 +41,7 @@ def main() -> None:
         streaming_incremental_dedup_bloom,
         streaming_interval_join,
     )
-    from big_data_co2_emission_analysis_spark.session import get_session
+    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
 
     spark = get_session("streaming-batches")
     spark.range(1000).selectExpr("sum(id)").collect()  # JVM warm-up
@@ -94,13 +94,7 @@ def main() -> None:
             )
         )
         # release the memory-sink table + localCheckpoint blocks
-        spark.catalog.clearCache()
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for rdd in list(jmap.values()):
-                rdd.unpersist(False)
-        except Exception:
-            pass
+        release_pinned(spark)
 
     spark.stop()
 
