@@ -458,12 +458,15 @@ def _pinned(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-def test_minhash_bucket_stats_pins_nothing(corpus, spark):
-    """The bucket_stats path consumes only the slim postings, so it must
-    persist NOTHING (r9 ADVICE: it used to pay a signature cache write
-    it never read)."""
+def test_minhash_cache_registry_release(corpus, spark):
+    """minhash builders persist/checkpoint intermediates (signatures,
+    candidates, shingles) that outlive the call; release_pinned must free
+    every one, and the bucket_stats path -- which consumes only the slim
+    postings -- must persist NOTHING (r9 ADVICE: it used to pay a
+    signature cache write it never read)."""
     from big_data_co2_emission_analysis_spark.operators.dedup import (
         minhash_banded_bucket_stats,
+        minhash_banded_pairs,
     )
     from big_data_co2_emission_analysis_spark.session import release_pinned
 
@@ -471,24 +474,20 @@ def test_minhash_bucket_stats_pins_nothing(corpus, spark):
     minhash_banded_bucket_stats(corpus, "doc_id", "text").collect()
     assert _pinned(spark) == 0
 
+    minhash_banded_pairs(corpus, "doc_id", "text", min_jaccard=0.3).collect()
+    assert release_pinned(spark) >= 1
+    assert _pinned(spark) == 0
 
-def test_release_pinned_frees_minhash_and_lm_caches(corpus, spark):
-    """The minhash builders persist/checkpoint intermediates (signatures,
-    candidates, shingles) and the bigram LM persists its count table;
-    all outlive the call, and release_pinned must free every one."""
-    from big_data_co2_emission_analysis_spark.operators.dedup import (
-        minhash_banded_pairs,
-    )
+
+def test_lm_cache_registry_release(spark):
+    """The bigram LM persists its count table past the call;
+    release_pinned frees it, and a second release finds nothing."""
     from big_data_co2_emission_analysis_spark.operators.ngram_lm import (
         score_docs_bigram_lm,
     )
     from big_data_co2_emission_analysis_spark.session import release_pinned
 
     release_pinned(spark)
-    minhash_banded_pairs(corpus, "doc_id", "text", min_jaccard=0.3).collect()
-    assert release_pinned(spark) >= 1
-    assert _pinned(spark) == 0
-
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta {i}") for i in range(30)],
         "doc_id long, text string",
