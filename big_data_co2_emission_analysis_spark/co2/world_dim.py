@@ -24,10 +24,14 @@ downstream depends on exact values.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-FIXTURE_PATH = "/root/repo/fixtures/world_dim.parquet"
+FIXTURE_PATH = os.path.abspath(
+    os.path.join(os.path.dirname(__file__), "..", "..", "fixtures", "world_dim.parquet")
+)
 
 # (iso_a3, name, continent, pop_est) -- naturalearth_lowres shape.
 # The five '-99' codes are the upstream data bug the reference works

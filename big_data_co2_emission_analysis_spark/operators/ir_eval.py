@@ -6,9 +6,9 @@ instead of a per-query driver loop).
 
 Inputs:
 
-- ``run``:   (query, doc, rank) -- rank 1-based, one row per retrieved
-  doc, already cut to the candidate depth.
-- ``qrels``: (query, doc, rel)  -- graded relevance; docs absent from
+- ``runs``:  arm name -> (query_term, doc_id, rank) -- rank 1-based, one
+  row per retrieved doc, already cut to the candidate depth.
+- ``qrels``: (query_term, doc_id, rel)  -- graded relevance; docs absent from
   qrels are irrelevant, and rel <= 0 rows (TREC judged-irrelevant) are
   filtered out up front so they can't inflate the recall denominator.
 
@@ -44,167 +44,95 @@ DCG_SCALE = 9
 
 
 def retrieval_metrics(
-    run: DataFrame,
-    qrels: DataFrame,
-    k: int = 10,
-    query_col: str = "query_term",
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
-    rel_col: str = "rel",
+    runs: dict[str, DataFrame], qrels: DataFrame, k: int = 10
 ) -> DataFrame:
-    """Per-query retrieval metrics at depth ``k``:
+    """Per-(arm, query) retrieval metrics at depth ``k`` for one or more
+    runs scored against ONE shared qrels:
 
-    (query, n_rel, n_hit_k, recall_at_k, precision_at_k, mrr_at_k,
-    ndcg_at_k), one row per query present in ``qrels`` (queries with an
-    empty run score 0 everywhere).  All rates are 6-dp-rounded doubles.
+    (retriever, query_term, n_rel, n_hit_k, recall_at_k, precision_at_k,
+    mrr_at_k, ndcg_at_k).  ``runs`` maps an arm name to a run with
+    columns (query_term, doc_id, rank); qrels carries (query_term,
+    doc_id, rel).  All rates are 6-dp-rounded doubles.
+
+    Per-arm work is limited to the hits join + one keyed aggregate over
+    the (bounded, k-deep) run rows; the ideal-DCG ranking and the n_rel
+    denominator depend only on qrels, so they compute once for all arms
+    -- for tf-derived qrels, N per-arm harness calls would cost N extra
+    corpus-scale ``grouped_topk`` passes.
+
+    Every (arm, query) pair present in qrels appears in the output -- an
+    arm that retrieved nothing for a query scores 0 (visible, not
+    silently dropped), matching the TREC convention and the SQL
+    oracles' ``retr CROSS JOIN nrel`` shape.
     """
+    from ..functions.ranking import grouped_topk
+
+    if not runs:
+        raise ValueError("retrieval_metrics: `runs` must contain at least one arm")
+    run = None
+    for name, r in runs.items():
+        missing = {"query_term", "doc_id", "rank"} - set(r.columns)
+        if missing:
+            raise ValueError(
+                f"retrieval_metrics: run {name!r} lacks columns {sorted(missing)}"
+            )
+        # Project down to the three columns the harness reads so arms with
+        # extra/score columns of differing names union cleanly.
+        part = r.select("query_term", "doc_id", "rank").withColumn(
+            "retriever", F.lit(name)
+        )
+        run = part if run is None else run.unionByName(part)
+
     gain = lambda c: F.pow(F.lit(2.0), F.col(c)) - F.lit(1.0)  # noqa: E731
     disc = lambda c: F.log2(F.col(c).cast("double") + F.lit(1.0))  # noqa: E731
+    r6 = lambda c: F.round(c, 6)  # noqa: E731
 
     # standard TREC qrels carry rel=0 (judged-irrelevant) rows; the
     # metrics' contract is rel > 0 == relevant, so enforce it here --
     # otherwise rel<=0 rows silently inflate n_rel (the recall
     # denominator) while n_hit_k keeps counting only rel>0
-    qrels = qrels.filter(F.col(rel_col) > 0)
+    qrels = qrels.filter(F.col("rel") > 0)
 
     hits = (
-        run.filter(F.col(rank_col) <= k)
-        .join(qrels, [query_col, id_col], "left")
-        .withColumn("__rel", F.coalesce(F.col(rel_col), F.lit(0)))
+        run.filter(F.col("rank") <= k)
+        .join(qrels, ["query_term", "doc_id"], "left")
+        .withColumn("__rel", F.coalesce(F.col("rel"), F.lit(0)))
     )
-    per_run = hits.groupBy(query_col).agg(
+    per_run = hits.groupBy("retriever", "query_term").agg(
         F.sum((F.col("__rel") > 0).cast("long")).alias("n_hit_k"),
-        dsum(gain("__rel") / disc(rank_col), DCG_SCALE).alias("__dcg"),
-        F.max(
-            F.when(F.col("__rel") > 0, F.lit(1.0) / F.col(rank_col))
-        ).alias("__rr"),
+        dsum(gain("__rel") / disc("rank"), DCG_SCALE).alias("__dcg"),
+        F.max(F.when(F.col("__rel") > 0, F.lit(1.0) / F.col("rank"))).alias("__rr"),
     )
-
-    from ..functions.ranking import grouped_topk
-
     ideal = (
         grouped_topk(
             qrels,
-            [query_col],
-            [F.desc(rel_col), F.asc(id_col)],
+            ["query_term"],
+            [F.desc("rel"), F.asc("doc_id")],
             k,
-            salt_on=[id_col],
+            salt_on=["doc_id"],
             rank_col="__irank",
         )
-        .groupBy(query_col)
-        .agg(dsum(gain(rel_col) / disc("__irank"), DCG_SCALE).alias("__idcg"))
+        .groupBy("query_term")
+        .agg(dsum(gain("rel") / disc("__irank"), DCG_SCALE).alias("__idcg"))
     )
-    n_rel = qrels.groupBy(query_col).agg(F.count(F.lit(1)).alias("n_rel"))
-
-    return _finalize_metrics(n_rel, ideal, per_run, [query_col], query_col, k=k)
-
-
-def retrieval_metrics_multi(
-    runs: dict[str, DataFrame],
-    qrels: DataFrame,
-    k: int = 10,
-    query_col: str = "query_term",
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
-    rel_col: str = "rel",
-    arm_col: str = "retriever",
-) -> DataFrame:
-    """Per-(arm, query) metrics for SEVERAL runs evaluated against ONE
-    shared qrels -- the multi-retriever comparison harness
-    (``ann_eval_metrics``: exact vs IVF vs PQ).
-
-    Why not N calls to :func:`retrieval_metrics`: the ideal-DCG ranking
-    and the n_rel denominator depend only on qrels, so per-arm calls
-    recompute both once PER ARM -- for tf-derived qrels that is N extra
-    corpus-scale ``grouped_topk`` passes.  Here per-arm work is limited
-    to the hits join + one keyed aggregate over the (bounded, k-deep)
-    run rows; ideal/n_rel compute once and broadcast-cross with the
-    arm list.  Values are identical to per-arm calls by construction
-    (per_run groups carry the arm key; ideal/n_rel are arm-invariant).
-
-    Every (arm, query) pair present in qrels appears in the output --
-    an arm that retrieved nothing for a query scores 0 (visible, not
-    silently dropped), matching the TREC convention and the SQL
-    oracles' ``retr CROSS JOIN nrel`` shape.
-    """
-    if not runs:
-        raise ValueError("retrieval_metrics_multi: `runs` must contain at least one arm")
-    spark = qrels.sparkSession
-    qrels = qrels.filter(F.col(rel_col) > 0)
-    run = None
-    for name, r in runs.items():
-        missing = {query_col, id_col, rank_col} - set(r.columns)
-        if missing:
-            raise ValueError(
-                f"retrieval_metrics_multi: run {name!r} lacks columns {sorted(missing)}"
-            )
-        # Project down to the three columns the harness reads so arms with
-        # extra/score columns of differing names union cleanly.
-        part = r.select(query_col, id_col, rank_col).withColumn(arm_col, F.lit(name))
-        run = part if run is None else run.unionByName(part)
-
-    gain = lambda c: F.pow(F.lit(2.0), F.col(c)) - F.lit(1.0)  # noqa: E731
-    disc = lambda c: F.log2(F.col(c).cast("double") + F.lit(1.0))  # noqa: E731
-
-    hits = (
-        run.filter(F.col(rank_col) <= k)
-        .join(qrels, [query_col, id_col], "left")
-        .withColumn("__rel", F.coalesce(F.col(rel_col), F.lit(0)))
+    n_rel = qrels.groupBy("query_term").agg(F.count(F.lit(1)).alias("n_rel"))
+    # the (arm, query) spine: every qrels query once per arm
+    spine = n_rel.join(ideal, "query_term").withColumn(
+        "retriever", F.explode(F.array(*[F.lit(a) for a in runs]))
     )
-    per_run = hits.groupBy(arm_col, query_col).agg(
-        F.sum((F.col("__rel") > 0).cast("long")).alias("n_hit_k"),
-        dsum(gain("__rel") / disc(rank_col), DCG_SCALE).alias("__dcg"),
-        F.max(
-            F.when(F.col("__rel") > 0, F.lit(1.0) / F.col(rank_col))
-        ).alias("__rr"),
-    )
-
-    from ..functions.ranking import grouped_topk
-
-    ideal = (
-        grouped_topk(
-            qrels,
-            [query_col],
-            [F.desc(rel_col), F.asc(id_col)],
-            k,
-            salt_on=[id_col],
-            rank_col="__irank",
-        )
-        .groupBy(query_col)
-        .agg(dsum(gain(rel_col) / disc("__irank"), DCG_SCALE).alias("__idcg"))
-    )
-    n_rel = qrels.groupBy(query_col).agg(F.count(F.lit(1)).alias("n_rel"))
-    arms = spark.createDataFrame([(a,) for a in runs], f"{arm_col} string")
-    base = n_rel.join(ideal, query_col).crossJoin(F.broadcast(arms))
-    return _finalize_metrics(base, None, per_run, [arm_col, query_col], query_col, k=k)
-
-
-def _finalize_metrics(n_rel, ideal, per_run, join_cols, query_col, k: int = 10):
-    """Shared tail of the single- and multi-arm harnesses: left-join
-    per-run aggregates onto the (query[, arm]) spine and derive the
-    6-dp-rounded rates (missing runs coalesce to 0)."""
-    spine = n_rel if ideal is None else n_rel.join(ideal, query_col)
-    r6 = lambda c: F.round(c, 6)  # noqa: E731
-    return (
-        spine
-        .join(per_run, join_cols, "left")
-        .select(
-            *join_cols,
-            "n_rel",
-            F.coalesce(F.col("n_hit_k"), F.lit(0)).cast("long").alias("n_hit_k"),
-            r6(
-                F.coalesce(F.col("n_hit_k"), F.lit(0)).cast("double")
-                / F.col("n_rel").cast("double")
-            ).alias("recall_at_k"),
-            r6(
-                F.coalesce(F.col("n_hit_k"), F.lit(0)).cast("double") / F.lit(float(k))
-            ).alias("precision_at_k"),
-            r6(F.coalesce(F.col("__rr"), F.lit(0.0))).alias("mrr_at_k"),
-            r6(
-                F.when(
-                    F.col("__idcg") > 0,
-                    F.coalesce(F.col("__dcg"), F.lit(0.0)) / F.col("__idcg"),
-                ).otherwise(F.lit(0.0))
-            ).alias("ndcg_at_k"),
-        )
+    n_hit = F.coalesce(F.col("n_hit_k"), F.lit(0))
+    return spine.join(per_run, ["retriever", "query_term"], "left").select(
+        "retriever",
+        "query_term",
+        "n_rel",
+        n_hit.cast("long").alias("n_hit_k"),
+        r6(n_hit.cast("double") / F.col("n_rel").cast("double")).alias("recall_at_k"),
+        r6(n_hit.cast("double") / F.lit(float(k))).alias("precision_at_k"),
+        r6(F.coalesce(F.col("__rr"), F.lit(0.0))).alias("mrr_at_k"),
+        r6(
+            F.when(
+                F.col("__idcg") > 0,
+                F.coalesce(F.col("__dcg"), F.lit(0.0)) / F.col("__idcg"),
+            ).otherwise(F.lit(0.0))
+        ).alias("ndcg_at_k"),
     )

@@ -1293,7 +1293,9 @@ def bm25_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # term" proxy), so the whole TREC-style harness -- run building, ideal
 # ranking, recall/precision/MRR/nDCG -- replays in SQL.  Ranks order by
 # the 6-dp-rounded score (ULP-stable) with doc_id tie-break; DCG sums
-# are 9-dp fixed-point (order-independent across engines).
+# are 9-dp fixed-point (order-independent across engines).  The three
+# eval rows (BM25, hybrid, ANN) build their shared inputs through the
+# helpers below and their oracles share one metric template.
 # --------------------------------------------------------------------------
 _EVAL_K = 10
 #: the evaluated query set: one single-term query per term ("shuffle"
@@ -1302,30 +1304,24 @@ _EVAL_K = 10
 _EVAL_TERMS = ("data", "join", "spark", "stream", "vector", "window")
 
 
-@register(
-    "bm25_eval_metrics",
-    oracle=f"""
-    WITH
-    {_bm25_ctes(_EVAL_TERMS)},
-    run AS (
-      SELECT term AS query_term, doc_id, rnk FROM (
-        SELECT term, doc_id,
-               ROW_NUMBER() OVER (
-                 PARTITION BY term ORDER BY ROUND(s, 6) DESC, doc_id) AS rnk
-        FROM scored
-      ) WHERE rnk <= {_EVAL_K}
-    ),
+def _eval_metric_sql(arms: tuple[str, ...]) -> str:
+    """The metric CTEs every eval oracle ends with: reads ``scored``
+    (the BM25 pipeline) and ``run (retriever, query_term, doc_id,
+    rnk)``, ends in ``metrics`` -- one row per (arm, qrels query), the
+    SQL replay of ``retrieval_metrics``."""
+    retr = " UNION ALL ".join(f"SELECT '{a}' AS retriever" for a in arms)
+    return f"""
     qrels AS (SELECT term AS query_term, doc_id, LEAST(tf, 3) AS rel FROM scored),
     hits AS (
-      SELECT r.query_term, r.rnk, COALESCE(q.rel, 0) AS rel
+      SELECT r.retriever, r.query_term, r.rnk, COALESCE(q.rel, 0) AS rel
       FROM run r LEFT JOIN qrels q USING (query_term, doc_id)
     ),
     per_run AS (
-      SELECT query_term,
+      SELECT retriever, query_term,
              CAST(SUM(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit_k,
              {sql_dsum("(POW(2.0, rel) - 1.0) / LOG2(rnk + 1.0)", 9)} AS dcg,
              MAX(CASE WHEN rel > 0 THEN 1.0 / rnk END) AS rr
-      FROM hits GROUP BY query_term
+      FROM hits GROUP BY retriever, query_term
     ),
     ideal AS (
       SELECT query_term,
@@ -1337,16 +1333,99 @@ _EVAL_TERMS = ("data", "join", "spark", "stream", "vector", "window")
       WHERE irank <= {_EVAL_K} GROUP BY query_term
     ),
     nrel AS (SELECT query_term, CAST(COUNT(*) AS BIGINT) AS n_rel
-             FROM qrels GROUP BY query_term)
-    SELECT n.query_term, n.n_rel,
-           COALESCE(p.n_hit_k, 0) AS n_hit_k,
-           ROUND(CAST(COALESCE(p.n_hit_k, 0) AS DOUBLE) / n.n_rel, 6) AS recall_at_k,
-           ROUND(CAST(COALESCE(p.n_hit_k, 0) AS DOUBLE) / {_EVAL_K}.0, 6) AS precision_at_k,
-           ROUND(COALESCE(p.rr, 0.0), 6) AS mrr_at_k,
-           ROUND(CASE WHEN i.idcg > 0 THEN COALESCE(p.dcg, 0.0) / i.idcg
-                      ELSE 0.0 END, 6) AS ndcg_at_k
-    FROM nrel n JOIN ideal i USING (query_term) LEFT JOIN per_run p USING (query_term)
-    ORDER BY n.query_term
+             FROM qrels GROUP BY query_term),
+    metrics AS (
+      SELECT rt.retriever, n.query_term, n.n_rel,
+             COALESCE(p.n_hit_k, 0) AS n_hit_k,
+             ROUND(CAST(COALESCE(p.n_hit_k, 0) AS DOUBLE) / n.n_rel, 6) AS recall_at_k,
+             ROUND(CAST(COALESCE(p.n_hit_k, 0) AS DOUBLE) / {_EVAL_K}.0, 6) AS precision_at_k,
+             ROUND(COALESCE(p.rr, 0.0), 6) AS mrr_at_k,
+             ROUND(CASE WHEN i.idcg > 0 THEN COALESCE(p.dcg, 0.0) / i.idcg
+                        ELSE 0.0 END, 6) AS ndcg_at_k
+      FROM ({retr}) rt
+      CROSS JOIN nrel n
+      JOIN ideal i USING (query_term)
+      LEFT JOIN per_run p
+        ON p.retriever = rt.retriever AND p.query_term = n.query_term
+    )
+"""
+
+
+def _eval_per_term(docs: DataFrame, terms: tuple[str, ...] = _EVAL_TERMS) -> DataFrame:
+    """Per-(term, doc) BM25 ``(query_term, doc_id, tf, score)``, eagerly
+    checkpointed: it feeds the lexical run AND the qrels side (read 3x
+    inside ``retrieval_metrics``: hits join, ideal topk, n_rel), so the
+    one corpus-tokenizing build runs once and every consumer reads
+    blocks (``session.release_pinned`` frees them).  SIDE EFFECT for
+    plan-only consumers: merely BUILDING an eval row runs this job;
+    inspect plans at a small SF."""
+    from ..functions.ranking import bm25_per_term
+
+    return bm25_per_term(docs, list(terms), k1=_BM25_K1, b=_BM25_B).localCheckpoint(
+        eager=True
+    )
+
+
+def _tf_qrels(per: DataFrame) -> DataFrame:
+    """The shared graded qrels: rel = min(tf, 3) per (term, doc)."""
+    return per.select(
+        "query_term", "doc_id", F.least(F.col("tf"), F.lit(3)).cast("int").alias("rel")
+    )
+
+
+def _normed_corpus(docs: DataFrame, emb: DataFrame) -> DataFrame:
+    """The retrievable corpus -- embeddings of ``docs`` (the
+    hybrid_rrf_top_docs vec_id<->doc_id convention) -- with the L2 norm
+    hoisted into ``__cn``: a projection BELOW the query broadcast join
+    folds once per corpus row instead of once per (row, term)."""
+    from .vector_queries import _sq_norm
+
+    return emb.join(
+        docs.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
+    ).withColumn("__cn", F.sqrt(_sq_norm(F.col("embedding"))))
+
+
+def _cosine_topk(corpus: DataFrame, qv: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine top-``k`` per query: ``corpus`` from
+    :func:`_normed_corpus`, ``qv`` (query_term, qv) -- one row per term,
+    broadcast into a map-side expansion with the query norm hoisted;
+    dot/(cn*qn) keeps the SQL oracles' exact IEEE op order, and the cut
+    is the salted ``grouped_topk`` (never a corpus-sized single-task
+    sort).  Returns (query_term, doc_id, rank)."""
+    from ..functions.ranking import grouped_topk
+    from .vector_queries import _dot, _sq_norm
+
+    q = F.broadcast(
+        qv.select(
+            "query_term",
+            F.col("qv").alias("__qv"),
+            F.sqrt(_sq_norm(F.col("qv"))).alias("__qn"),
+        )
+    )
+    cosine = _dot(F.col("embedding"), F.col("__qv")) / (F.col("__cn") * F.col("__qn"))
+    scores = corpus.join(q).select(
+        "query_term", F.col("vec_id").alias("doc_id"), F.round(cosine, 6).alias("__cos")
+    )
+    return grouped_topk(
+        scores, ["query_term"], [F.desc("__cos"), F.asc("doc_id")], k=k, salt_on=["doc_id"]
+    ).select("query_term", "doc_id", "rank")
+
+
+@register(
+    "bm25_eval_metrics",
+    oracle=f"""
+    WITH
+    {_bm25_ctes(_EVAL_TERMS)},
+    run AS (
+      SELECT 'bm25' AS retriever, term AS query_term, doc_id, rnk FROM (
+        SELECT term, doc_id,
+               ROW_NUMBER() OVER (
+                 PARTITION BY term ORDER BY ROUND(s, 6) DESC, doc_id) AS rnk
+        FROM scored
+      ) WHERE rnk <= {_EVAL_K}
+    ),
+    {_eval_metric_sql(("bm25",))}
+    SELECT * EXCLUDE (retriever) FROM metrics ORDER BY query_term
     """,
     tags=("text", "ranking", "eval"),
 )
@@ -1355,15 +1434,10 @@ def bm25_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     term, recall@10 / precision@10 / MRR@10 / nDCG@10 against graded
     tf-derived qrels -- the eval harness a RAG pipeline runs after
     every ranker or index change, fully distributed (no driver loop)."""
-    from ..functions.ranking import bm25_per_term, grouped_topk
+    from ..functions.ranking import grouped_topk
     from ..operators.ir_eval import retrieval_metrics
 
-    # `per` feeds the run AND the qrels side (read 3x inside
-    # retrieval_metrics: hits join, ideal topk, n_rel) -- checkpoint
-    # the one corpus-tokenizing build so every consumer reads blocks
-    per = bm25_per_term(_docs(spark, sf_dir), list(_EVAL_TERMS)).localCheckpoint(
-        eager=True
-    )
+    per = _eval_per_term(_docs(spark, sf_dir))
     # run building: salted two-level top-k -- a direct per-term window
     # would sort each term's corpus-sized match set in one task
     run = grouped_topk(
@@ -1373,10 +1447,11 @@ def bm25_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_EVAL_K,
         salt_on=["doc_id"],
     ).select("query_term", "doc_id", "rank")
-    qrels = per.select(
-        "query_term", "doc_id", F.least(F.col("tf"), F.lit(3)).cast("int").alias("rel")
+    return (
+        retrieval_metrics({"bm25": run}, _tf_qrels(per), k=_EVAL_K)
+        .drop("retriever")
+        .orderBy("query_term")
     )
-    return retrieval_metrics(run, qrels, k=_EVAL_K).orderBy("query_term")
 
 
 #: RRF constant + per-arm candidate-list depth, shared by the hybrid
@@ -1403,19 +1478,16 @@ def _prf_hybrid_run(
     emb: DataFrame,
     terms: tuple[str, ...] = _EVAL_TERMS,
     k: int = _EVAL_K,
-    list_n: int = _RRF_LIST_N,
-    rrf_k: int = _RRF_K,
 ) -> tuple[DataFrame, DataFrame]:
     """(run, qrels) for the PRF-hybrid retriever over ``docs``/``emb``:
-    run = per-term top-``k`` by RRF fusion of the BM25 top-``list_n``
-    and the cosine top-``list_n`` against the lexical #1 document's
+    run = per-term top-``k`` by RRF fusion of the BM25 top-``_RRF_LIST_N``
+    and the cosine top-``_RRF_LIST_N`` against the lexical #1 document's
     embedding; qrels = the tf-derived graded relevance the BM25 eval
     uses (shared, so hybrid vs lexical nDCG is apples-to-apples).
 
     Scale shape: both arms cut through the salted ``grouped_topk``
-    (never a corpus-sized single-task sort); the PRF query vectors are
-    one row per term, broadcast into a map-side 6x cosine expansion;
-    fusion joins bounded (``list_n``-row) lists per term.
+    (never a corpus-sized single-task sort); fusion joins bounded
+    (``_RRF_LIST_N``-row) lists per term.
 
     Coverage contract: the PRF query-vector join (top-1 doc -> its
     embedding) is INNER, so a term whose lexical #1 document had no
@@ -1425,24 +1497,17 @@ def _prf_hybrid_run(
     guarantee should left-join and alert on null vectors
     (``ann_eval_metrics`` surfaces such a term as an all-zero row
     rather than dropping it)."""
-    from ..functions.ranking import bm25_per_term, grouped_topk, rrf_fuse
-    from .vector_queries import _dot, _sq_norm
+    from ..functions.ranking import grouped_topk, rrf_fuse
 
-    # shared-frame single-build (the ann_eval_metrics pattern): `per`
-    # carries the tokenize-the-corpus BM25 lineage and is consumed by
-    # the lexical arm AND the qrels side (which retrieval_metrics reads
-    # three times) -- checkpoint once, every consumer reads blocks.
-    # `lex` is bounded (list_n rows/term) but is read twice (PRF top-1
-    # and fusion), each read otherwise re-running the salted topk.
-    per = bm25_per_term(docs, list(terms), k1=_BM25_K1, b=_BM25_B).localCheckpoint(
-        eager=True
-    )
+    per = _eval_per_term(docs, terms)
+    # `lex` is bounded (_RRF_LIST_N rows/term) but is read twice (PRF
+    # top-1 and fusion), each read otherwise re-running the salted topk
     lex = (
         grouped_topk(
             per.select("query_term", "doc_id", F.round("score", 6).alias("__s")),
             ["query_term"],
             [F.desc("__s"), F.asc("doc_id")],
-            k=list_n,
+            k=_RRF_LIST_N,
             salt_on=["doc_id"],
         )
         .select("query_term", "doc_id", "rank")
@@ -1450,41 +1515,12 @@ def _prf_hybrid_run(
     )
 
     top1 = lex.filter(F.col("rank") == 1).select("query_term", "doc_id")
-    qv = F.broadcast(
-        top1.join(emb, top1["doc_id"] == emb["vec_id"]).select(
-            "query_term",
-            F.col("embedding").alias("__qv"),
-            # query-norm hoisted: one fold per TERM here vs one per
-            # (corpus row, term) inside the cosine below
-            F.sqrt(_sq_norm(F.col("embedding"))).alias("__qn"),
-        )
+    qv = top1.join(emb, top1["doc_id"] == emb["vec_id"]).select(
+        "query_term", F.col("embedding").alias("qv")
     )
-    # corpus-side norm hoisted into a projection BELOW the broadcast
-    # join (a projection stays under the join in Catalyst), so it folds
-    # once per corpus row instead of once per (row, term) join output;
-    # dot/(cn*qn) keeps the SQL oracle's exact IEEE op order
-    corpus_vecs = emb.join(
-        docs.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
-    ).withColumn("__cn", F.sqrt(_sq_norm(F.col("embedding"))))
-    cosine = _dot(F.col("embedding"), F.col("__qv")) / (
-        F.col("__cn") * F.col("__qn")
-    )
-    sem_scores = corpus_vecs.join(qv).select(
-        "query_term",
-        F.col("vec_id").alias("doc_id"),
-        F.round(cosine, 6).alias("__cos"),
-    )
-    sem = grouped_topk(
-        sem_scores,
-        ["query_term"],
-        [F.desc("__cos"), F.asc("doc_id")],
-        k=list_n,
-        salt_on=["doc_id"],
-    ).select("query_term", "doc_id", "rank")
+    sem = _cosine_topk(_normed_corpus(docs, emb), qv, _RRF_LIST_N)
 
-    fused = rrf_fuse(
-        {"lex": lex, "sem": sem}, k=rrf_k, group_cols=["query_term"]
-    )
+    fused = rrf_fuse({"lex": lex, "sem": sem}, k=_RRF_K, group_cols=["query_term"])
     run = grouped_topk(
         fused,
         ["query_term"],
@@ -1492,12 +1528,7 @@ def _prf_hybrid_run(
         k=k,
         salt_on=["doc_id"],
     ).select("query_term", "doc_id", "rank")
-    qrels = per.select(
-        "query_term",
-        "doc_id",
-        F.least(F.col("tf"), F.lit(3)).cast("int").alias("rel"),
-    )
-    return run, qrels
+    return run, _tf_qrels(per)
 
 
 @register(
@@ -1546,45 +1577,15 @@ def _prf_hybrid_run(
       FULL JOIN sem_top s ON l.query_term = s.query_term AND l.doc_id = s.doc_id
     ),
     run AS (
-      SELECT query_term, doc_id, rnk FROM (
+      SELECT 'hybrid' AS retriever, query_term, doc_id, rnk FROM (
         SELECT query_term, doc_id,
                ROW_NUMBER() OVER (
                  PARTITION BY query_term ORDER BY rrf_score DESC, doc_id) AS rnk
         FROM fused
       ) WHERE rnk <= {_EVAL_K}
     ),
-    qrels AS (SELECT term AS query_term, doc_id, LEAST(tf, 3) AS rel FROM scored),
-    hits AS (
-      SELECT r.query_term, r.rnk, COALESCE(q.rel, 0) AS rel
-      FROM run r LEFT JOIN qrels q USING (query_term, doc_id)
-    ),
-    per_run AS (
-      SELECT query_term,
-             CAST(SUM(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit_k,
-             {sql_dsum("(POW(2.0, rel) - 1.0) / LOG2(rnk + 1.0)", 9)} AS dcg,
-             MAX(CASE WHEN rel > 0 THEN 1.0 / rnk END) AS rr
-      FROM hits GROUP BY query_term
-    ),
-    ideal AS (
-      SELECT query_term,
-             {sql_dsum("(POW(2.0, rel) - 1.0) / LOG2(irank + 1.0)", 9)} AS idcg
-      FROM (SELECT query_term, rel,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY query_term ORDER BY rel DESC, doc_id) AS irank
-            FROM qrels)
-      WHERE irank <= {_EVAL_K} GROUP BY query_term
-    ),
-    nrel AS (SELECT query_term, CAST(COUNT(*) AS BIGINT) AS n_rel
-             FROM qrels GROUP BY query_term)
-    SELECT n.query_term, n.n_rel,
-           COALESCE(p.n_hit_k, 0) AS n_hit_k,
-           ROUND(CAST(COALESCE(p.n_hit_k, 0) AS DOUBLE) / n.n_rel, 6) AS recall_at_k,
-           ROUND(CAST(COALESCE(p.n_hit_k, 0) AS DOUBLE) / {_EVAL_K}.0, 6) AS precision_at_k,
-           ROUND(COALESCE(p.rr, 0.0), 6) AS mrr_at_k,
-           ROUND(CASE WHEN i.idcg > 0 THEN COALESCE(p.dcg, 0.0) / i.idcg
-                      ELSE 0.0 END, 6) AS ndcg_at_k
-    FROM nrel n JOIN ideal i USING (query_term) LEFT JOIN per_run p USING (query_term)
-    ORDER BY n.query_term
+    {_eval_metric_sql(("hybrid",))}
+    SELECT * EXCLUDE (retriever) FROM metrics ORDER BY query_term
     """,
     tags=("text", "ranking", "eval", "vector"),
 )
@@ -1597,7 +1598,11 @@ def hybrid_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .vector_queries import _emb
 
     run, qrels = _prf_hybrid_run(_docs(spark, sf_dir), _emb(spark, sf_dir))
-    return retrieval_metrics(run, qrels, k=_EVAL_K).orderBy("query_term")
+    return (
+        retrieval_metrics({"hybrid": run}, qrels, k=_EVAL_K)
+        .drop("retriever")
+        .orderBy("query_term")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1625,52 +1630,6 @@ from .mlops import (  # noqa: E402  (oracle builds need these at module level)
     _PQ_DET_DSUB,
     _PQ_DET_REFINE,
 )
-
-_ANN_EVAL_METRIC_SQL = f"""
-    run AS (
-      SELECT * FROM exact_run
-      UNION ALL SELECT * FROM ivf_run
-      UNION ALL SELECT * FROM pq_run
-    ),
-    qrels AS (SELECT term AS query_term, doc_id, LEAST(tf, 3) AS rel FROM scored),
-    hits AS (
-      SELECT r.retriever, r.query_term, r.rnk, COALESCE(q.rel, 0) AS rel
-      FROM run r LEFT JOIN qrels q USING (query_term, doc_id)
-    ),
-    per_run AS (
-      SELECT retriever, query_term,
-             CAST(SUM(CASE WHEN rel > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit_k,
-             {sql_dsum("(POW(2.0, rel) - 1.0) / LOG2(rnk + 1.0)", 9)} AS dcg,
-             MAX(CASE WHEN rel > 0 THEN 1.0 / rnk END) AS rr
-      FROM hits GROUP BY retriever, query_term
-    ),
-    ideal AS (
-      SELECT query_term,
-             {sql_dsum("(POW(2.0, rel) - 1.0) / LOG2(irank + 1.0)", 9)} AS idcg
-      FROM (SELECT query_term, rel,
-                   ROW_NUMBER() OVER (
-                     PARTITION BY query_term ORDER BY rel DESC, doc_id) AS irank
-            FROM qrels)
-      WHERE irank <= {_EVAL_K} GROUP BY query_term
-    ),
-    nrel AS (SELECT query_term, CAST(COUNT(*) AS BIGINT) AS n_rel
-             FROM qrels GROUP BY query_term),
-    retr AS (SELECT 'exact' AS retriever
-             UNION ALL SELECT 'ivf_det' UNION ALL SELECT 'pq_det')
-    SELECT rt.retriever, n.query_term, n.n_rel,
-           COALESCE(p.n_hit_k, 0) AS n_hit_k,
-           ROUND(CAST(COALESCE(p.n_hit_k, 0) AS DOUBLE) / n.n_rel, 6) AS recall_at_k,
-           ROUND(CAST(COALESCE(p.n_hit_k, 0) AS DOUBLE) / {_EVAL_K}.0, 6) AS precision_at_k,
-           ROUND(COALESCE(p.rr, 0.0), 6) AS mrr_at_k,
-           ROUND(CASE WHEN i.idcg > 0 THEN COALESCE(p.dcg, 0.0) / i.idcg
-                      ELSE 0.0 END, 6) AS ndcg_at_k
-    FROM retr rt
-    CROSS JOIN nrel n
-    JOIN ideal i USING (query_term)
-    LEFT JOIN per_run p
-      ON p.retriever = rt.retriever AND p.query_term = n.query_term
-    ORDER BY rt.retriever, n.query_term
-"""
 
 
 @register(
@@ -1782,7 +1741,13 @@ _ANN_EVAL_METRIC_SQL = f"""
         JOIN qv q ON q.query_term = s.query_term
       ) WHERE rnk <= {_EVAL_K}
     ),
-    {_ANN_EVAL_METRIC_SQL}
+    run AS (
+      SELECT * FROM exact_run
+      UNION ALL SELECT * FROM ivf_run
+      UNION ALL SELECT * FROM pq_run
+    ),
+    {_eval_metric_sql(("exact", "ivf_det", "pq_det"))}
+    SELECT * FROM metrics ORDER BY retriever, query_term
     """,
     tags=("text", "ranking", "eval", "vector", "similarity", "ml"),
 )
@@ -1792,61 +1757,35 @@ def ann_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     same tf-derived qrels as the BM25/hybrid rows -- the index-quality
     gate: how much nDCG/recall each ANN index trades for its speed and
     memory, as oracle-checked data."""
-    from ..functions.ranking import bm25_per_term, grouped_topk
-    from ..operators.ir_eval import retrieval_metrics_multi
-    from ..operators.similarity import ivf_search_assigned, pq_search_coded
-    from .mlops import _det_kmeans, _det_pq
-    from .vector_queries import _dot, _emb, _sq_norm
-
-    docs = _docs(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    # The three shared frames below are each consumed by SEVERAL arms
-    # (the PQ arm alone references the query vectors twice: LUT build
-    # and re-rank), and `per`/`qv` carry the full tokenize-the-corpus
-    # BM25 lineage -- without a cut, building three runs + qrels
-    # re-tokenizes the corpus ~10x.  localCheckpoint(eager=True) is the
-    # curated_corpus_v4 single-build pattern: materialize once at build
-    # time, every consumer reads blocks (``session.release_pinned``
-    # frees them).
-    # Values are unchanged by construction -- a checkpoint is a
-    # materialization, not a plan.  SIDE EFFECT for plan-only
-    # consumers: merely BUILDING this DataFrame (explain/dump_plans)
-    # executes the corpus-scale tokenize jobs behind the eager
-    # checkpoints; inspect plans at a small SF.
-    # The `per` chain and the `corpus` frame are INDEPENDENT eager
-    # materializations -- building them sequentially left the cluster
-    # idle between two small jobs (guide section 2.6 "overlap
-    # independent jobs"; the job-gap ledger for this query showed the
-    # checkpoint phase as back-to-back sub-second jobs separated by
-    # driver gaps).  Two driver threads submit them concurrently;
-    # values are unchanged (checkpoints are materializations, and each
-    # thread builds an independent plan).  Both targets are wrapped in
-    # inheritable_thread_target so the caller's job group, local
-    # properties and tags cover the checkpoint jobs too.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.util import inheritable_thread_target
 
-    def _build_per():
-        return bm25_per_term(
-            docs, list(_EVAL_TERMS), k1=_BM25_K1, b=_BM25_B
-        ).localCheckpoint(eager=True)
+    from ..functions.ranking import grouped_topk
+    from ..operators.ir_eval import retrieval_metrics
+    from ..operators.similarity import ivf_search_assigned, pq_search_coded
+    from .mlops import _det_kmeans, _det_pq
+    from .vector_queries import _emb
 
-    def _build_corpus():
-        # retrievable corpus with the L2 norm hoisted ONCE per vector
-        # (the exact arm otherwise re-folds the d-element sum per
-        # (row, term): a 6x map-side blowup); shared by exact scan,
-        # IVF cell join, and PQ re-rank -- build-once/search-many
-        return (
-            emb.join(docs.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi")
-            .withColumn("__cn", F.sqrt(_sq_norm(F.col("embedding"))))
-            .localCheckpoint(eager=True)
-        )
-
+    docs = _docs(spark, sf_dir)
+    emb = _emb(spark, sf_dir)
+    # `per`, `corpus` and `qv` are each consumed by SEVERAL arms (the PQ
+    # arm alone references the query vectors twice: LUT build and
+    # re-rank) -- without a cut, building three runs + qrels
+    # re-tokenizes the corpus ~10x, so each is an eager localCheckpoint
+    # (the curated_corpus_v4 single-build pattern).
+    # `per` and `corpus` are INDEPENDENT eager materializations: two
+    # driver threads submit them concurrently instead of leaving the
+    # cluster idle between two small jobs (guide section 2.6 "overlap
+    # independent jobs").  Both targets are wrapped in
+    # inheritable_thread_target so the caller's job group, local
+    # properties and tags cover the checkpoint jobs too.
     _inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_per = _pool.submit(_inherit(_build_per))
-        _f_corpus = _pool.submit(_inherit(_build_corpus))
+        _f_per = _pool.submit(_inherit(_eval_per_term), docs)
+        _f_corpus = _pool.submit(
+            _inherit(lambda: _normed_corpus(docs, emb).localCheckpoint(eager=True))
+        )
         per = _f_per.result()
         corpus = _f_corpus.result()
     top1 = grouped_topk(
@@ -1864,31 +1803,8 @@ def ann_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    # exact arm: brute-force cosine, salted top-k cut (the sem-arm
-    # shape); dot/(cn*qn) keeps the oracle's exact IEEE op order
-    sc = corpus.join(
-        F.broadcast(
-            qv.select(
-                "query_term",
-                F.col("qv").alias("__qv"),
-                F.sqrt(_sq_norm(F.col("qv"))).alias("__qn"),
-            )
-        )
-    ).select(
-        "query_term",
-        F.col("vec_id").alias("doc_id"),
-        F.round(
-            _dot(F.col("embedding"), F.col("__qv")) / (F.col("__cn") * F.col("__qn")),
-            6,
-        ).alias("__cos"),
-    )
-    exact_run = grouped_topk(
-        sc,
-        ["query_term"],
-        [F.desc("__cos"), F.asc("doc_id")],
-        k=_EVAL_K,
-        salt_on=["doc_id"],
-    ).select("query_term", "doc_id", "rank")
+    # exact arm: brute-force cosine (the hybrid's semantic arm)
+    exact_run = _cosine_topk(corpus, qv, _EVAL_K)
 
     # IVF arm: probe the deterministic k-means cells
     assignments, centroids = _det_kmeans(spark, sf_dir)
@@ -1917,25 +1833,12 @@ def ann_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         query_vec="qv",
     ).select("query_term", F.col("vec_id").alias("doc_id"), "rank")
 
-    qrels = per.select(
-        "query_term", "doc_id", F.least(F.col("tf"), F.lit(3)).cast("int").alias("rel")
-    )
-    # one multi-arm harness call: ideal-DCG and n_rel (arm-invariant,
-    # corpus-scale qrels aggregates) compute ONCE instead of per arm
-    res = retrieval_metrics_multi(
+    # one harness call: ideal-DCG and n_rel (arm-invariant, corpus-scale
+    # qrels aggregates) compute ONCE instead of per arm
+    return retrieval_metrics(
         {"exact": exact_run, "ivf_det": ivf_run, "pq_det": pq_run},
-        qrels,
+        _tf_qrels(per),
         k=_EVAL_K,
-    )
-    return res.select(
-        "retriever",
-        "query_term",
-        "n_rel",
-        "n_hit_k",
-        "recall_at_k",
-        "precision_at_k",
-        "mrr_at_k",
-        "ndcg_at_k",
     ).orderBy("retriever", "query_term")
 
 

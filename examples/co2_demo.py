@@ -17,8 +17,10 @@ examples/figures/*.bmp by the engine's own rasterizer
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:

@@ -518,3 +518,5 @@ def test_minhash_slim_and_small_shapes_value_identical(corpus):
     slim = rows(slim_postings=True, prune_verify=True)
     small = rows(slim_postings=False, prune_verify=False)
     assert small == slim and small
+    # the candidate-id broadcast gate's shuffle fallback: same rows
+    assert rows(slim_postings=True, prune_verify=True, broadcast_max_ids=0) == slim

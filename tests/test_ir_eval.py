@@ -1,7 +1,7 @@
 """Retrieval-eval operator (operators/ir_eval.py): hand-computed
 recall/precision/MRR/nDCG on tiny run+qrels tables, zero-row edges,
-depth cut, and the registry query's engine-vs-oracle agreement is
-covered by check_oracle (bm25_eval_metrics)."""
+depth cut, the multi-arm spine, and the three eval rows (BM25, hybrid,
+ANN) against their DuckDB oracles at sf0.001."""
 
 import math
 
@@ -18,11 +18,16 @@ def _qrels(spark, rows):
     return spark.createDataFrame(rows, "query_term string, doc_id long, rel int")
 
 
+def _metrics(run, qrels, k):
+    """Single-arm harness call, without the arm column."""
+    return retrieval_metrics({"run": run}, qrels, k=k).drop("retriever")
+
+
 def test_metrics_hand_computed(spark):
     # run for q: d9 (irrelevant), d1 (rel 3), d3 (rel 2); qrels has d2 too
     run = _run(spark, [("q", 9, 1), ("q", 1, 2), ("q", 3, 3)])
     qrels = _qrels(spark, [("q", 1, 3), ("q", 2, 1), ("q", 3, 2)])
-    out = retrieval_metrics(run, qrels, k=3).collect()[0]
+    out = _metrics(run, qrels, k=3).collect()[0]
 
     assert out.n_rel == 3
     assert out.n_hit_k == 2
@@ -37,7 +42,7 @@ def test_metrics_hand_computed(spark):
 def test_no_relevant_retrieved_scores_zero(spark):
     run = _run(spark, [("q", 8, 1), ("q", 9, 2)])
     qrels = _qrels(spark, [("q", 1, 2)])
-    out = retrieval_metrics(run, qrels, k=2).collect()[0]
+    out = _metrics(run, qrels, k=2).collect()[0]
     assert out.n_hit_k == 0
     assert out.recall_at_k == 0.0
     assert out.mrr_at_k == 0.0
@@ -47,7 +52,7 @@ def test_no_relevant_retrieved_scores_zero(spark):
 def test_query_with_empty_run_still_reported(spark):
     run = _run(spark, [("a", 1, 1)])
     qrels = _qrels(spark, [("a", 1, 1), ("b", 2, 3)])
-    out = {r.query_term: r for r in retrieval_metrics(run, qrels, k=5).collect()}
+    out = {r.query_term: r for r in _metrics(run, qrels, k=5).collect()}
     assert set(out) == {"a", "b"}
     assert out["b"].n_hit_k == 0
     assert out["b"].ndcg_at_k == 0.0
@@ -60,7 +65,7 @@ def test_depth_cut_ignores_ranks_past_k(spark):
     # the only relevant doc sits at rank 3, but k=2 cuts it
     run = _run(spark, [("q", 8, 1), ("q", 9, 2), ("q", 1, 3)])
     qrels = _qrels(spark, [("q", 1, 2)])
-    out = retrieval_metrics(run, qrels, k=2).collect()[0]
+    out = _metrics(run, qrels, k=2).collect()[0]
     assert out.n_hit_k == 0
     assert out.mrr_at_k == 0.0
 
@@ -68,7 +73,7 @@ def test_depth_cut_ignores_ranks_past_k(spark):
 def test_perfect_ranking_ndcg_is_one(spark):
     run = _run(spark, [("q", 1, 1), ("q", 2, 2), ("q", 3, 3)])
     qrels = _qrels(spark, [("q", 1, 3), ("q", 2, 2), ("q", 3, 1)])
-    out = retrieval_metrics(run, qrels, k=3).collect()[0]
+    out = _metrics(run, qrels, k=3).collect()[0]
     assert out.ndcg_at_k == pytest.approx(1.0, abs=1e-6)
     assert out.recall_at_k == pytest.approx(1.0)
     assert out.precision_at_k == pytest.approx(1.0)
@@ -84,8 +89,8 @@ def test_rel_zero_qrels_rows_are_ignored(spark):
         spark,
         [("q", 1, 3), ("q", 2, 1), ("q", 3, 2), ("q", 9, 0), ("q", 42, 0)],
     )
-    a = sorted(retrieval_metrics(run, clean, k=3).collect())
-    b = sorted(retrieval_metrics(run, judged, k=3).collect())
+    a = sorted(_metrics(run, clean, k=3).collect())
+    b = sorted(_metrics(run, judged, k=3).collect())
     assert a == b
     assert b[0].n_rel == 3  # not 5
 
@@ -96,7 +101,7 @@ def test_all_rel_zero_query_not_reported(spark):
     # judged-irrelevant count
     run = _run(spark, [("a", 1, 1)])
     qrels = _qrels(spark, [("a", 1, 1), ("z", 2, 0)])
-    out = {r.query_term for r in retrieval_metrics(run, qrels, k=5).collect()}
+    out = {r.query_term for r in _metrics(run, qrels, k=5).collect()}
     assert out == {"a"}
 
 
@@ -137,8 +142,8 @@ def test_hybrid_prf_beats_bm25_on_planted_fixture(spark):
         salt_on=["doc_id"],
     ).select("query_term", "doc_id", "rank")
 
-    mb = retrieval_metrics(run_b, qrels, k=10).collect()[0]
-    mh = retrieval_metrics(run_h, qrels, k=10).collect()[0]
+    mb = _metrics(run_b, qrels, k=10).collect()[0]
+    mh = _metrics(run_h, qrels, k=10).collect()[0]
     hybrid_docs = {r.doc_id for r in run_h.collect()}
     assert 99 not in {r.doc_id for r in run_b.collect()}  # BM25 buries it
     assert 99 in hybrid_docs  # the semantic arm recovers it
@@ -153,10 +158,10 @@ def test_partition_invariance(spark):
     rows_qrels = [(q, d, r) for q, d, r in rows_qrels if r > 0]
     run, qrels = _run(spark, rows_run), _qrels(spark, rows_qrels)
     a = sorted(
-        retrieval_metrics(run.repartition(1), qrels.repartition(1), k=5).collect()
+        _metrics(run.repartition(1), qrels.repartition(1), k=5).collect()
     )
     b = sorted(
-        retrieval_metrics(run.repartition(13), qrels.repartition(7), k=5).collect()
+        _metrics(run.repartition(13), qrels.repartition(7), k=5).collect()
     )
     assert a == b
 
@@ -205,14 +210,10 @@ def test_ann_eval_metrics_build_jobs_keep_caller_job_group(spark):
 
 
 def test_multi_arm_metrics_match_per_arm_calls(spark):
-    """retrieval_metrics_multi must be a pure refactor of N per-arm
-    retrieval_metrics calls (ideal/n_rel computed once instead of per
-    arm): identical rows for every (arm, query), including an arm that
-    retrieved nothing for some query (all-zero row, not a dropped one)."""
-    from big_data_co2_emission_analysis_spark.operators.ir_eval import (
-        retrieval_metrics_multi,
-    )
-
+    """A multi-arm call must equal N single-arm calls (ideal/n_rel are
+    computed once instead of per arm): identical rows for every (arm,
+    query), including an arm that retrieved nothing for some query and
+    an arm whose run is empty (all-zero rows, not dropped ones)."""
     rows_qrels = [("q%d" % (i % 5), i, (i % 4)) for i in range(0, 150, 2)]
     rows_qrels = [(q, d, r) for q, d, r in rows_qrels if r > 0]
     qrels = _qrels(spark, rows_qrels)
@@ -223,43 +224,73 @@ def test_multi_arm_metrics_match_per_arm_calls(spark):
             spark,
             [("q%d" % (i % 4), i * 2, (i % 6) + 1) for i in range(80)],
         ),
+        # arm that retrieved nothing at all -> one all-zero row per query
+        "empty": _run(spark, []),
     }
     multi = {
         (r.retriever, r.query_term): r.asDict()
-        for r in retrieval_metrics_multi(runs, qrels, k=5).collect()
+        for r in retrieval_metrics(runs, qrels, k=5).collect()
     }
     for arm, run in runs.items():
-        for r in retrieval_metrics(run, qrels, k=5).collect():
-            got = dict(multi[(arm, r.query_term)])
-            got.pop("retriever")
-            assert got == r.asDict(), (arm, r.query_term, got, r.asDict())
+        for r in retrieval_metrics({arm: run}, qrels, k=5).collect():
+            assert multi[(arm, r.query_term)] == r.asDict(), (arm, r.query_term)
     # every (arm, qrels-query) pair present
     assert set(multi) == {(a, "q%d" % i) for a in runs for i in range(5)}
+    for i in range(5):
+        row = multi[("empty", "q%d" % i)]
+        assert row["n_rel"] == multi[("good", "q%d" % i)]["n_rel"] > 0
+        assert row["n_hit_k"] == 0
+        for m in ("recall_at_k", "precision_at_k", "mrr_at_k", "ndcg_at_k"):
+            assert row[m] == 0.0, (i, m, row[m])
 
 
 def test_multi_arm_rejects_empty_and_malformed_runs(spark):
-    """Guard rails (r12): empty runs dict and a run missing a required
+    """Guard rails: empty runs dict and a run missing a required
     column both fail with a clear ValueError instead of an
     AttributeError / opaque unionByName analysis error; a run carrying
     EXTRA columns (scores, debug cols) is projected down and unions
     cleanly with a bare run."""
-    from big_data_co2_emission_analysis_spark.operators.ir_eval import (
-        retrieval_metrics_multi,
-    )
     from pyspark.sql import functions as F
 
     qrels = _qrels(spark, [("q0", 1, 2), ("q0", 2, 1)])
     with pytest.raises(ValueError, match="at least one arm"):
-        retrieval_metrics_multi({}, qrels)
+        retrieval_metrics({}, qrels)
     bad = _run(spark, [("q0", 1, 1)]).drop("rank")
     with pytest.raises(ValueError, match="lacks columns.*rank"):
-        retrieval_metrics_multi({"a": bad}, qrels)
+        retrieval_metrics({"a": bad}, qrels)
     plain = _run(spark, [("q0", 1, 1), ("q0", 2, 2)])
     extra = plain.withColumn("score", F.lit(0.5)).withColumn("dbg", F.lit("x"))
-    out = retrieval_metrics_multi({"plain": plain, "extra": extra}, qrels, k=5)
+    out = retrieval_metrics({"plain": plain, "extra": extra}, qrels, k=5)
     rows = {(r.retriever, r.query_term): r for r in out.collect()}
     assert rows[("plain", "q0")].asDict() != {}
     a = rows[("plain", "q0")].asDict()
     b = rows[("extra", "q0")].asDict()
     a.pop("retriever"), b.pop("retriever")
     assert a == b
+
+
+def test_eval_rows_match_duckdb_oracle(spark, sf_dir):
+    """The three eval rows agree with their registry oracles in DuckDB:
+    same columns, row count and canonical values (the check_oracle
+    comparison, run in tier-1 for the rows sharing one metric
+    template)."""
+    import duckdb
+
+    from big_data_co2_emission_analysis_spark.queries import all_queries
+    from big_data_co2_emission_analysis_spark.session import release_pinned
+    from tools.check_oracle import canon
+
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    qs = all_queries()
+    for name in ("bm25_eval_metrics", "hybrid_eval_metrics", "ann_eval_metrics"):
+        release_pinned(spark)
+        sdf = qs[name].fn(spark, sf_dir)
+        cols = sorted(sdf.columns)
+        srows = [r.asDict() for r in sdf.collect()]
+        ddf = con.sql(qs[name].oracle)
+        drows = [dict(zip(ddf.columns, r)) for r in ddf.fetchall()]
+        assert sorted(ddf.columns) == cols, name
+        assert len(srows) == len(drows) > 0, name
+        assert canon(srows, cols) == canon(drows, cols), name

@@ -117,6 +117,9 @@ def test_apply_late_update_inside_closed_history(spark):
     from big_data_co2_emission_analysis_spark.operators.scd2 import scd2_current
 
     assert scd2_current(merged).count() == 2
+    # the late-key broadcast gate's shuffle fallback gives the same rows
+    shuffled = scd2_apply(dim, late, ["k"], "ts", broadcast_max_keys=0)
+    assert _rows(shuffled) == _rows(merged)
 
 
 def test_apply_batch_loop_leaves_nothing_pinned(spark, tmp_path):

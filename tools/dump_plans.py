@@ -8,8 +8,10 @@ planner-visible change:
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 #: (query name, what to look for in the plan)
 SHOWCASE = [
@@ -311,7 +313,7 @@ def main() -> None:
         if keep:
             out += ["", "\n\n".join(keep).strip()]
         out += ["```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
 

@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def fmt_bytes(n: int) -> str:
@@ -41,7 +43,7 @@ def main() -> None:
     from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/PROFILE.md"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else str(ROOT / "PROFILE.md")
     spark = get_session("profile")
     ensure_bucketed_tables(spark, sf_dir)
     ensure_partitioned_orders(spark, sf_dir)

@@ -4,8 +4,10 @@ static table in co2/world_dim.py.  One file, coalesced -- it's a
 
 import shutil
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -17,7 +19,7 @@ def main() -> None:
     world_dim_df(spark).coalesce(1).write.mode("overwrite").parquet(tmp)
     # single flat .parquet file (DuckDB + spark.read both accept it)
     part = next(
-        p for p in __import__("pathlib").Path(tmp).iterdir() if p.name.endswith(".parquet")
+        p for p in Path(tmp).iterdir() if p.name.endswith(".parquet")
     )
     shutil.move(str(part), FIXTURE_PATH)
     shutil.rmtree(tmp)

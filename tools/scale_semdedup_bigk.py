@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -30,8 +32,8 @@ def main() -> None:
 
     sf_dirs = sys.argv[1:] or [
         "/root/testdata/sf0.1",
-        "/root/repo/fixtures/sf1.0",
-        "/root/repo/fixtures/sf10",
+        str(ROOT / "fixtures" / "sf1.0"),
+        str(ROOT / "fixtures" / "sf10"),
     ]
     spark = get_session("scale-semdedup-bigk")
     for sf_dir in sf_dirs:
