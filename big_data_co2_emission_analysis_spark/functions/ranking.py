@@ -3,16 +3,16 @@ text operator (quality-weighted corpus selection / dedup-cluster
 ranking both want a lexical relevance score next to the embedding
 path in operators/similarity.py).
 
-Everything is native Catalyst expressions: tokenize = split+explode,
-stats = two tiny aggregates, score = codegen'd arithmetic.  No Python
-boundary.
+Everything is native Catalyst expressions: tokenize = split + array
+filter, stats = one tiny aggregate, score = codegen'd arithmetic.  No
+Python boundary.
 
-Scale shape: doc length is a pure map (size(split(...))), the term
-frequencies shuffle once on (doc, term) AFTER filtering to the query's
-terms (so the shuffled volume scales with matches, not corpus), the
-per-term document frequencies reduce to |query| rows and broadcast,
-and the final per-doc sum shuffles only matched docs.  The full-corpus
-N / avgdl statistics are one scalar row broadcast into the plan.
+Scale shape: one row per doc carries its length and its matched
+tokens, so doc length and every (doc, term) tf are pure maps over that
+row -- nothing shuffles on doc or (doc, term).  N, avgdl and the
+per-term document frequencies are ONE aggregate (a single row: two
+scalars and a |query|-entry map) broadcast into the plan, and the
+final per-doc sum of ``bm25_scores`` shuffles only matched docs.
 """
 
 from __future__ import annotations
@@ -37,20 +37,20 @@ def _bm25_scored_frame(
 ) -> DataFrame:
     """(__id, __term, __tf, __s): the per-(doc, term) BM25 partial
     before the per-document sum -- shared by the multi-term scorer and
-    the per-term retrieval-eval run builder.
+    the per-term retrieval-eval run builder.  ``id_col`` must be a key
+    of ``docs`` (the SQL oracle's ``GROUP BY doc_id`` assumes it too).
 
-    The corpus tokenize runs ONCE (r12): doc length, corpus stats and
-    the term stream are three plan branches, and Catalyst does not
-    share common subtrees across branches -- the un-checkpointed shape
-    re-ran the full regex tokenize 3x per action (measured at sf0.1:
-    whole frame 1.4 s vs 0.6 s for a single tokenize pass).  The slim
-    projection below keeps one row per doc with its length and ONLY
-    the matched tokens (|terms| is query-sized, so the array filter
-    drops ~every token), eagerly checkpointed: ~24 B/doc, linear --
-    the curated_corpus_v4 single-build pattern.  Build-time side
-    effect for plan-only consumers as documented there.  The
-    checkpoint pins one block per call; ``session.release_pinned``
-    frees it."""
+    The corpus tokenize runs ONCE (r12): the stats and the term stream
+    are two plan branches and Catalyst shares no subtree across them,
+    so the slim projection -- one row per doc with its length and ONLY
+    the matched tokens -- is eagerly checkpointed: ~24 B/doc, linear --
+    the curated_corpus_v4 single-build pattern (a build-time job;
+    ``session.release_pinned`` frees its block).  After it everything
+    is row-local -- tf counts the term in the doc's own ``__m`` -- and
+    N, avgdl and each term's df are ONE broadcast aggregate.  N and
+    avgdl count only docs with at least one token (Lucene's docCount,
+    and the oracle's ``dl``)."""
+    terms = list(dict.fromkeys(terms))  # a repeated map key would raise
     base = docs.select(
         F.col(id_col).alias("__id"), tokenize(F.col(text_col)).alias("__toks")
     )
@@ -59,43 +59,34 @@ def _bm25_scored_frame(
         F.size("__toks").alias("__len"),
         F.filter("__toks", lambda t: t.isin(*terms)).alias("__m"),
     ).localCheckpoint(eager=True)
-    dl = slim.select("__id", "__len")
 
-    # corpus scalars: exact integer sum / count division
-    stats = dl.agg(
-        F.count("*").alias("__n"),
-        (F.sum("__len").cast("double") / F.count("*")).alias("__avgdl"),
+    # corpus scalars (exact integer sum / count division) + df per term
+    has_toks = F.col("__len") > 0
+    dfs = [x for t in terms for x in (F.lit(t), F.count_if(F.array_contains("__m", t)))]
+    stats = slim.agg(
+        F.count_if(has_toks).alias("__n"),
+        (F.sum(F.when(has_toks, F.col("__len"))).cast("double") / F.count_if(has_toks))
+        .alias("__avgdl"),
+        F.create_map(*dfs).alias("__dfs"),
+    )
+    tf = slim.select(
+        "__id", "__len", "__m", F.explode(F.array_distinct("__m")).alias("__term")
+    ).select(
+        "__id",
+        "__len",
+        "__term",
+        F.size(F.filter("__m", lambda t: t == F.col("__term")))
+        .cast("long")
+        .alias("__tf"),
     )
 
-    toks = slim.select("__id", F.explode("__m").alias("__term"))
-    tf = toks.groupBy("__id", "__term").agg(F.count("*").alias("__tf"))
-    dfreq = toks.groupBy("__term").agg(F.count_distinct("__id").alias("__df"))
-
-    return (
-        tf.join(F.broadcast(dfreq), "__term")
-        .join(dl, "__id")
-        .join(F.broadcast(stats))
-        .select(
-            "__id",
-            "__term",
-            "__tf",
-            (
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("__n") - F.col("__df") + F.lit(0.5))
-                    / (F.col("__df") + F.lit(0.5))
-                )
-                * (F.col("__tf") * F.lit(k1 + 1.0))
-                / (
-                    F.col("__tf")
-                    + F.lit(k1)
-                    * (
-                        F.lit(1.0 - b)
-                        + F.lit(b) * F.col("__len") / F.col("__avgdl")
-                    )
-                )
-            ).alias("__s"),
-        )
+    n, df = F.col("__n"), F.element_at("__dfs", F.col("__term"))
+    idf = F.log(F.lit(1.0) + (n - df + F.lit(0.5)) / (df + F.lit(0.5)))
+    dl, avgdl = F.col("__len"), F.col("__avgdl")
+    norm = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / avgdl)
+    score = idf * (F.col("__tf") * F.lit(k1 + 1.0)) / (F.col("__tf") + norm)
+    return tf.join(F.broadcast(stats)).select(
+        "__id", "__term", "__tf", score.alias("__s")
     )
 
 
@@ -184,56 +175,38 @@ def grouped_topk(
     group_cols: list[str],
     order_cols: list,
     k: int,
-    salt_on: list[str],
     rank_col: str = "rank",
-    fan: int = 32,
 ) -> DataFrame:
-    """Per-group top-``k`` with bounded sorts: a two-level tournament
-    instead of one ``row_number`` window per group.
+    """Per-group top-``k``: ``row_number`` over
+    ``partitionBy(group).orderBy(order)``, filtered at ``<= k``, as a
+    long ``rank_col``.  Deterministic provided ``order_cols`` is a
+    total order (give it a unique tie-break column).
 
-    A direct ``Window.partitionBy(group)`` ranks each group in ONE
-    task — with few groups over a large table (6 query terms over a
-    corpus) that is a handful of corpus-sized single-partition sorts.
-    Here level 1 splits every group into ``fan`` deterministic salt
-    lanes (hash of ``salt_on``), keeps k per lane, and level 2 ranks
-    the surviving ``fan * k`` rows per group — bounded regardless of
-    group size.  Value-identical to the direct window provided
-    ``order_cols`` is a total order (give it a unique tie-break
-    column) and lane assignment is deterministic per row.
-
-    ``salt_on`` is REQUIRED and must vary within a group (typically
-    the unique tie-break id): hashing only group-constant columns
-    would put every row of a group in one lane, silently degenerating
-    level 1 back into the single-task whole-group sort this function
-    exists to avoid — so that is rejected loudly.
+    Scale shape: Spark plans the filtered window as a Partial
+    ``WindowGroupLimit`` below the one hash exchange on the group keys
+    and a Final one above it, so each map task ships at most ``k`` rows
+    per group -- a corpus-sized group (6 query terms over a corpus)
+    never funnels whole into one task's sort.  The optimizer only
+    inserts the limit for ``k`` up to the session's
+    ``spark.sql.optimizer.windowGroupLimitThreshold`` (default 1000),
+    so a larger ``k`` is rejected rather than silently shuffling every
+    row.
     """
     from pyspark.sql import Window
 
-    if fan < 1:
-        # pmod(x, 0) is null: every row would land in one null lane and
-        # level 1 silently degenerates into the single-task sort this
-        # function exists to avoid (results correct, scale bound gone)
-        raise ValueError(f"fan must be >= 1, got {fan}")
-    if not salt_on:
-        raise ValueError("salt_on must name at least one within-group-varying column")
-    if set(salt_on) <= set(group_cols):
-        raise ValueError(
-            f"salt_on {salt_on} is a subset of group_cols {group_cols}: the lane "
-            "hash would be constant within every group (no spread); pass a "
-            "row-identifying column such as the order tie-break id"
-        )
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_on]), F.lit(fan))
-    w1 = Window.partitionBy(*group_cols, "__lane").orderBy(*order_cols)
-    cand = (
-        df.withColumn("__lane", salt)
-        .withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= k)
-        .drop("__lane", "__r1")
+    threshold = int(
+        df.sparkSession.conf.get("spark.sql.optimizer.windowGroupLimitThreshold")
     )
-    w2 = Window.partitionBy(*group_cols).orderBy(*order_cols)
+    if not 1 <= k <= threshold:
+        raise ValueError(
+            f"k must be in [1, {threshold}] "
+            f"(spark.sql.optimizer.windowGroupLimitThreshold), got {k}"
+        )
+    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return (
-        cand.withColumn(rank_col, F.row_number().over(w2).cast("long"))
+        df.withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
+        .withColumn(rank_col, F.col(rank_col).cast("long"))
     )
 
 

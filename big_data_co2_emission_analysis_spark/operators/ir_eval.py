@@ -15,10 +15,10 @@ Inputs:
 Scale shape: the run->qrels join is keyed (query, doc) and 1:1; DCG /
 MRR / hit counts are one map-side-combined groupBy over run rows; the
 ideal-DCG ranking needs only the k best-rel qrels per query, so it
-runs through the salted two-level ``grouped_topk`` (hash lanes ->
-fan*k survivors) -- a corpus-sized qrels list for a hot query (e.g.
-tf-derived relevance where a common term matches most documents)
-never funnels through one single-task sort.  No driver loop, no
+runs through ``grouped_topk``, whose partial per-group limit ships at
+most k rows per query from each map task -- a corpus-sized qrels list
+for a hot query (e.g. tf-derived relevance where a common term
+matches most documents) never funnels whole into one task's sort.  No driver loop, no
 collect: metrics for a million queries are one DataFrame.
 
 Gain convention: DCG gain = 2^rel - 1, discount = log2(rank + 1)
@@ -109,7 +109,6 @@ def retrieval_metrics(
             ["query_term"],
             [F.desc("rel"), F.asc("doc_id")],
             k,
-            salt_on=["doc_id"],
             rank_col="__irank",
         )
         .groupBy("query_term")

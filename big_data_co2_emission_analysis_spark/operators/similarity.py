@@ -599,14 +599,16 @@ def pq_search_coded(
       (sub, cid), one map-side-combined groupBy summing the m decimal
       terms per (query, vector).
     - short-list: top ``refine * k`` per query by (adc, id) through
-      the salted two-level ``grouped_topk`` -- the corpus-sized ADC
-      stream never funnels into one single-task sort.
+      ``grouped_topk`` -- each map task ships at most ``refine * k``
+      rows per query, so the corpus-sized ADC stream never funnels
+      whole into one task's sort.
     - re-rank: exact cosine (6 dp) of the short-list against the
       corpus vectors; final rank window is bounded (refine*k rows per
       query).
 
-    Scale shape: the only corpus-sized exchanges are the codes scan
-    and its grouped_topk lanes; codebook and query relations ride as
+    Scale shape: the only corpus-sized exchange is the ADC groupBy
+    over the codes scan (grouped_topk's exchange moves at most
+    ``refine * k`` rows per query per map task); codebook and query relations ride as
     broadcasts.  Codes are ~m bytes/vector vs 4*dim for floats -- the
     32x-compression memory story of the numpy path, kept.
     """
@@ -652,7 +654,6 @@ def pq_search_coded(
         ["qid"],
         [F.desc("adc"), F.asc("id")],
         k=refine * k,
-        salt_on=["id"],
         rank_col="__sr",
     ).select("qid", "id")
 

@@ -1390,8 +1390,8 @@ def _cosine_topk(corpus: DataFrame, qv: DataFrame, k: int) -> DataFrame:
     :func:`_normed_corpus`, ``qv`` (query_term, qv) -- one row per term,
     broadcast into a map-side expansion with the query norm hoisted;
     dot/(cn*qn) keeps the SQL oracles' exact IEEE op order, and the cut
-    is the salted ``grouped_topk`` (never a corpus-sized single-task
-    sort).  Returns (query_term, doc_id, rank)."""
+    is ``grouped_topk`` (a partial per-term limit before its one
+    exchange).  Returns (query_term, doc_id, rank)."""
     from ..functions.ranking import grouped_topk
     from .vector_queries import _dot, _sq_norm
 
@@ -1407,7 +1407,7 @@ def _cosine_topk(corpus: DataFrame, qv: DataFrame, k: int) -> DataFrame:
         "query_term", F.col("vec_id").alias("doc_id"), F.round(cosine, 6).alias("__cos")
     )
     return grouped_topk(
-        scores, ["query_term"], [F.desc("__cos"), F.asc("doc_id")], k=k, salt_on=["doc_id"]
+        scores, ["query_term"], [F.desc("__cos"), F.asc("doc_id")], k=k
     ).select("query_term", "doc_id", "rank")
 
 
@@ -1438,14 +1438,13 @@ def bm25_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ir_eval import retrieval_metrics
 
     per = _eval_per_term(_docs(spark, sf_dir))
-    # run building: salted two-level top-k -- a direct per-term window
-    # would sort each term's corpus-sized match set in one task
+    # run building: grouped_topk's partial per-term limit keeps a
+    # term's corpus-sized match set from reaching one task whole
     run = grouped_topk(
         per,
         ["query_term"],
         [F.desc(F.round("score", 6)), F.asc("doc_id")],
         k=_EVAL_K,
-        salt_on=["doc_id"],
     ).select("query_term", "doc_id", "rank")
     return (
         retrieval_metrics({"bm25": run}, _tf_qrels(per), k=_EVAL_K)
@@ -1485,8 +1484,8 @@ def _prf_hybrid_run(
     embedding; qrels = the tf-derived graded relevance the BM25 eval
     uses (shared, so hybrid vs lexical nDCG is apples-to-apples).
 
-    Scale shape: both arms cut through the salted ``grouped_topk``
-    (never a corpus-sized single-task sort); fusion joins bounded
+    Scale shape: both arms cut through ``grouped_topk`` (a partial
+    per-term limit before its one exchange); fusion joins bounded
     (``_RRF_LIST_N``-row) lists per term.
 
     Coverage contract: the PRF query-vector join (top-1 doc -> its
@@ -1501,14 +1500,13 @@ def _prf_hybrid_run(
 
     per = _eval_per_term(docs, terms)
     # `lex` is bounded (_RRF_LIST_N rows/term) but is read twice (PRF
-    # top-1 and fusion), each read otherwise re-running the salted topk
+    # top-1 and fusion), each read otherwise re-running the topk
     lex = (
         grouped_topk(
             per.select("query_term", "doc_id", F.round("score", 6).alias("__s")),
             ["query_term"],
             [F.desc("__s"), F.asc("doc_id")],
             k=_RRF_LIST_N,
-            salt_on=["doc_id"],
         )
         .select("query_term", "doc_id", "rank")
         .localCheckpoint(eager=True)
@@ -1526,7 +1524,6 @@ def _prf_hybrid_run(
         ["query_term"],
         [F.desc("rrf_score"), F.asc("doc_id")],
         k=k,
-        salt_on=["doc_id"],
     ).select("query_term", "doc_id", "rank")
     return run, _tf_qrels(per)
 
@@ -1793,7 +1790,6 @@ def ann_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["query_term"],
         [F.desc("__s"), F.asc("doc_id")],
         k=1,
-        salt_on=["doc_id"],
     ).select("query_term", "doc_id")
     # 6 rows; checkpointing makes every arm's broadcast read a
     # LogicalRDD instead of re-running topk-over-BM25

@@ -139,7 +139,6 @@ def test_hybrid_prf_beats_bm25_on_planted_fixture(spark):
         ["query_term"],
         [F.desc("__s"), F.asc("doc_id")],
         k=10,
-        salt_on=["doc_id"],
     ).select("query_term", "doc_id", "rank")
 
     mb = _metrics(run_b, qrels, k=10).collect()[0]

@@ -4,11 +4,16 @@ properties, tokenizer behavior."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_co2_emission_analysis_spark.functions.ranking import bm25_scores, tokenize
+from big_data_co2_emission_analysis_spark.functions.ranking import (
+    bm25_per_term,
+    bm25_scores,
+    tokenize,
+)
 
 K1, B = 1.2, 0.75
 
@@ -86,6 +91,60 @@ def test_bm25_plan_stays_native(corpus):
 
     plan = explain_formatted(bm25_scores(corpus, ["cat", "dog"]))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    # the per-term frame is row-local after its slim checkpoint: no
+    # doc-length join and no (doc, term) tf shuffle
+    per = explain_formatted(bm25_per_term(corpus, ["cat", "dog"]))
+    assert "SortMergeJoin" not in per
+    assert not re.search(r"Exchange hashpartitioning\(__id", per), per
+
+
+_ORACLE_DOCS = [
+    (1, "cat dog cat"),
+    (2, "Dog BIRD dog dog"),
+    (3, ""),
+    (4, "   "),
+    (5, None),
+    (6, "fish CAT  fish"),
+    (7, "bird"),
+    (8, "cat cat cat cat dog bird fish"),
+]
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_bm25_per_term_matches_duckdb_oracle(spark, ansi):
+    """bm25_per_term agrees with the registry's SQL BM25 pipeline
+    (``_bm25_ctes``) on a corpus with empty, blank and null texts,
+    uppercase and repeated tokens and a repeated query term -- under
+    both ANSI settings (with ANSI off, ``size(null)`` is -1).  N and
+    avgdl count only documents with at least one token, as the SQL
+    ``dl`` GROUP BY does."""
+    import duckdb
+    import pandas as pd
+
+    from big_data_co2_emission_analysis_spark.queries.text_queries import _bm25_ctes
+
+    terms = ["cat", "cat", "dog"]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        docs = spark.createDataFrame(_ORACLE_DOCS, "doc_id long, text string")
+        got = sorted(
+            (r.query_term, r.doc_id, r.tf, round(r.score, 9))
+            for r in bm25_per_term(docs, terms).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(_ORACLE_DOCS, columns=["doc_id", "text"]))
+    want = sorted(
+        (term, doc_id, tf, round(s, 9))
+        for doc_id, term, tf, s in con.sql(
+            f"WITH {_bm25_ctes(tuple(terms))} SELECT doc_id, term, tf, s FROM scored"
+        ).fetchall()
+    )
+    assert len(want) == 6
+    assert got == want
 
 
 # -- RRF fusion (functions/ranking.py rrf_fuse / ranked_topn) ---------------
@@ -139,10 +198,10 @@ def test_grouped_topk_matches_direct_window(spark):
             Window.partitionBy("grp").orderBy(*order)).cast("long"))
         .filter(F.col("rank") <= 7)
     )
-    salted = grouped_topk(df, ["grp"], order, k=7, salt_on=["id"], fan=8)
+    topk = grouped_topk(df, ["grp"], order, k=7)
     key = lambda r: (r.grp, r.rank)  # noqa: E731
     assert sorted(direct.collect(), key=key) == sorted(
-        salted.select(*direct.columns).collect(), key=key
+        topk.select(*direct.columns).collect(), key=key
     )
 
 
@@ -155,16 +214,39 @@ def test_grouped_topk_rejects_bad_salt_and_fan(spark):
 
     df = spark.createDataFrame([("g", 1, 1.0)], "grp string, id long, score double")
     order = [F.desc("score"), F.asc("id")]
-    with _pytest.raises(ValueError, match="salt_on"):
-        grouped_topk(df, ["grp"], order, 5, salt_on=[])
-    with _pytest.raises(ValueError, match="subset of group_cols"):
-        grouped_topk(df, ["grp"], order, 5, salt_on=["grp"])
-    # fan < 1 makes pmod null: one null lane == the single-task sort
-    # the function exists to avoid, so it must be rejected loudly
-    with _pytest.raises(ValueError, match="fan"):
-        grouped_topk(df, ["grp"], order, 5, salt_on=["id"], fan=0)
-    with _pytest.raises(ValueError, match="fan"):
-        grouped_topk(df, ["grp"], order, 5, salt_on=["id"], fan=-3)
+    threshold = int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
+    with _pytest.raises(ValueError, match="k must be"):
+        grouped_topk(df, ["grp"], order, 0)
+    # above the threshold Spark plans no partial limit: every row of a
+    # group would shuffle into one task, so it is rejected loudly
+    with _pytest.raises(ValueError, match="windowGroupLimitThreshold"):
+        grouped_topk(df, ["grp"], order, threshold + 1)
+    assert grouped_topk(df, ["grp"], order, threshold).count() == 1
+
+
+def test_grouped_topk_single_exchange_with_partial_limit(spark):
+    """One hash exchange, with a Partial WindowGroupLimit below it: each
+    map task ships at most k rows per group."""
+    from pyspark.sql import functions as F
+
+    from big_data_co2_emission_analysis_spark.functions.ranking import grouped_topk
+
+    rows = [(f"g{i % 3}", i, float(i % 13)) for i in range(400)]
+    df = spark.createDataFrame(rows, "grp string, id long, score double")
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        out = grouped_topk(df, ["grp"], [F.desc("score"), F.asc("id")], 5)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    lines = plan.splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    partial = [
+        i for i, ln in enumerate(lines) if "WindowGroupLimit" in ln and "Partial" in ln
+    ]
+    assert len(exchanges) == 1, plan
+    assert len(partial) == 1 and partial[0] > exchanges[0], plan
 
 
 def test_grouped_topk_partition_invariance(spark):
@@ -175,8 +257,6 @@ def test_grouped_topk_partition_invariance(spark):
     rows = [(f"g{i % 3}", i, float(i % 13)) for i in range(400)]
     df = spark.createDataFrame(rows, "grp string, id long, score double")
     order = [F.desc("score"), F.asc("id")]
-    a = sorted(grouped_topk(df.repartition(1), ["grp"], order, 5,
-                            salt_on=["id"]).collect(), key=str)
-    b = sorted(grouped_topk(df.repartition(11), ["grp"], order, 5,
-                            salt_on=["id"]).collect(), key=str)
+    a = sorted(grouped_topk(df.repartition(1), ["grp"], order, 5).collect(), key=str)
+    b = sorted(grouped_topk(df.repartition(11), ["grp"], order, 5).collect(), key=str)
     assert a == b

@@ -240,8 +240,10 @@ SHOWCASE = [
     ),
     (
         "bm25_eval_metrics",
-        "Retrieval eval: the run builder is the salted two-level "
-        "grouped_topk (hash lanes -> fan*k survivors), so no per-term "
+        "Retrieval eval: the per-term BM25 frame is row-local after "
+        "its slim checkpoint (one broadcast stats/df aggregate, no "
+        "shuffle); the run builder is grouped_topk, a Partial "
+        "WindowGroupLimit below its one exchange, so no per-term "
         "corpus-sized single-partition sort; run->qrels join is keyed "
         "1:1; DCG/MRR are one map-side-combined groupBy; only the "
         "ideal ranking windows over the qrels lists.",
@@ -252,7 +254,7 @@ SHOWCASE = [
         "PRF query vectors (one per eval term = the lexical #1 doc's "
         "embedding) broadcast into a map-side |terms|x cosine "
         "expansion over the corpus embeddings; both arms and the "
-        "fused run cut through the salted grouped_topk; metrics reuse "
+        "fused run cut through grouped_topk; metrics reuse "
         "operators/ir_eval.py unchanged.",
     ),
     (

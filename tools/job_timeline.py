@@ -1,11 +1,15 @@
 """Per-JOB wall-clock timeline of one registry query: run it once
 (warm, after a throwaway iteration) and print every Spark job's
-description, duration and gap since the previous job's completion --
+stage count, description (its call site when no description is set),
+duration and gap since the previous job's completion --
 the measurement for driver/scheduling-bound queries (guide section 5:
 many small sequential jobs leave the cluster idle between them; the
 fix is fewer jobs or overlapped jobs, not faster stages).
 
-    python tools/job_timeline.py [--sf SF_DIR] [--warm] name
+    python tools/job_timeline.py [--sf SF_DIR] [--warmups N] [--no-warm] name
+
+e.g. ``SPARK_GRAFT_CPUS=4 python tools/job_timeline.py --sf
+perfbench/data/sf0.01 --warmups 2 bm25_eval_metrics``.
 """
 
 from __future__ import annotations
@@ -68,7 +72,8 @@ def main() -> None:
         desc = str(desc.get()) if desc.isDefined() else ""
         t_sub = sub.get().getTime() / 1000.0
         t_comp = comp.get().getTime() / 1000.0
-        rows.append((int(j.jobId()), t_sub, t_comp, desc))
+        n_stages = int(j.stageIds().size())
+        rows.append((int(j.jobId()), t_sub, t_comp, n_stages, desc or str(j.name())))
     rows.sort()
     if not rows:
         print("no jobs captured", file=sys.stderr)
@@ -77,14 +82,16 @@ def main() -> None:
     prev_end = None
     total_gap = 0.0
     print(f"# {args.name}: wall={wall:.3f}s, {len(rows)} jobs")
-    print(f"{'job':>5} {'start':>8} {'dur_s':>7} {'gap_s':>7}  description")
-    for jid, s, c, desc in rows:
+    head = f"{'job':>5} {'start':>8} {'dur_s':>7} {'gap_s':>7} {'stages':>6}"
+    print(f"{head}  description")
+    for jid, s, c, n_stages, desc in rows:
         gap = 0.0 if prev_end is None else max(0.0, s - prev_end)
         total_gap += gap
-        print(f"{jid:>5} {s - t0:>8.3f} {c - s:>7.3f} {gap:>7.3f}  {desc[:90]}")
+        row = f"{jid:>5} {s - t0:>8.3f} {c - s:>7.3f} {gap:>7.3f} {n_stages:>6}"
+        print(f"{row}  {desc[:90]}")
         prev_end = c if prev_end is None else max(prev_end, c)
     print(
-        f"# sum(job dur)={sum(c - s for _, s, c, _ in rows):.3f}s, "
+        f"# sum(job dur)={sum(c - s for _, s, c, _, _ in rows):.3f}s, "
         f"sum(inter-job gaps)={total_gap:.3f}s, "
         f"span={rows[-1][2] - t0:.3f}s"
     )
