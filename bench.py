@@ -27,10 +27,12 @@ per-query number is the warm MEDIAN (round-4 fix: single-shot warm
 numbers swung 2.3x round-over-round on unchanged code -- JIT/GC
 interleaving noise -- so medians are the only comparable statistic);
 all iterations plus the IQR go to BENCH_DETAIL.json under
-"queries_iters" / "queries_iqr".  `session.release_pinned` runs
-between every iteration so any operator-internal persist or
-checkpoint (e.g. the banded-LSH shingle base) is recomputed in each
-timed run -- warm means warm CODE, not warm data.
+"queries_iters" / "queries_iqr".  The warm iterations follow
+`plans.metrics.warm_series`: a sweep (`session.release_pinned` plus a
+JVM GC) before every timed run and after the last, so any
+operator-internal persist or checkpoint (e.g. the banded-LSH shingle
+base) is recomputed in each timed run -- warm means warm CODE, not
+warm data.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import platform
+import statistics
 import sys
 from datetime import datetime, timezone
 import time
@@ -165,8 +168,9 @@ HEADLINE = [
 
 
 def main() -> None:
+    from big_data_co2_emission_analysis_spark.plans.metrics import timed, warm_series
     from big_data_co2_emission_analysis_spark.queries import all_queries
-    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
+    from big_data_co2_emission_analysis_spark.session import get_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
@@ -261,45 +265,16 @@ def main() -> None:
     iter_times: dict[str, list[float]] = {}
     iqrs: dict[str, float] = {}
 
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
+    def run(name: str) -> None:
         df = qs[name].fn(spark, sf_dir)
         # noop sink: full materialization of all columns, nothing written
         df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
-
-    def median(xs: list[float]) -> float:
-        s = sorted(xs)
-        n = len(s)
-        return round(s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2, 3)
-
-    def clear_all_caches() -> None:
-        # drop operator-internal persisted data (SQL caches AND
-        # RDD-level localCheckpoint blocks) so every warm run redoes ALL
-        # data work and only reuses compiled code
-        release_pinned(spark)
-        # Force a JVM GC so ContextCleaner promptly releases dead
-        # shuffle files/metadata from the previous execution.  Spark
-        # itself only forces one every 30 min
-        # (spark.cleaner.periodicGC.interval), and on a large driver
-        # heap (32g at sf10) ordinary GC never fires -- measured
-        # effect of skipping this: after ~200 executions the
-        # shuffle-heaviest query (ngram_jaccard_pairs, sized
-        # 319-partition exchanges) crept 47->89->100 s across its
-        # own warm iterations in the full sf10 bench while running
-        # flat at ~34 s in a fresh JVM.  Runs outside the timed
-        # region.
-        spark._jvm.System.gc()
 
     for name in HEADLINE:
-        cold_times[name] = run(name)
-        iters = []
-        for _ in range(n_iters):
-            clear_all_caches()
-            iters.append(run(name))
-        clear_all_caches()
+        cold_times[name] = timed(lambda: run(name))
+        iters = warm_series(spark, lambda: run(name), n_iters)
         iter_times[name] = iters
-        times[name] = median(iters)
+        times[name] = round(statistics.median(iters), 3)
         lo, hi = sorted(iters)[len(iters) // 4], sorted(iters)[-1 - len(iters) // 4]
         iqrs[name] = round(hi - lo, 3)
         print(

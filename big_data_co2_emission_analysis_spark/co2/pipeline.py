@@ -132,11 +132,11 @@ def world_join(
     CO2 side stays a DataFrame and is the broadcast (non-preserved)
     side of the join.
     """
-    from .world_dim import apply_iso_patches, world_dim_df
+    from .world_dim import apply_iso_patches, geo_left_join, world_dim_df
 
     dim = apply_iso_patches(world_dim_df(spark or df.sparkSession))
     co2 = df.withColumnRenamed("Country Code", "iso_a3").select("iso_a3", *value_cols)
-    return dim.join(F.broadcast(co2), on="iso_a3", how="left")
+    return geo_left_join(dim, co2)
 
 
 # -- the ML leg (reference project-co2.py:34-76) ---------------------------

@@ -1,22 +1,37 @@
-"""Executed-plan metrics: the quantitative feedback loop behind the
-wall-clock numbers in bench.py.
+"""The measurement core: what a measured call ran, and the warm-run
+protocol every timing tool follows.
 
-``collect_metrics`` executes a DataFrame and walks the final adaptive
-plan's SQL metrics, aggregating the ones that decide scale behavior:
-rows/bytes scanned (is pruning working?), shuffle bytes written (is
-the plan shuffling more than the data requires?), and spill bytes
-(are partitions sized to memory?).  Use when tuning an operator:
+- ``collect_metrics`` executes a DataFrame and walks the final adaptive
+  plan's SQL metrics, aggregating the ones that decide scale behavior:
+  rows/bytes scanned (is pruning working?), shuffle bytes written (is
+  the plan shuffling more than the data requires?), and spill bytes
+  (are partitions sized to memory?).  Use when tuning an operator::
 
-    from big_data_co2_emission_analysis_spark.plans.metrics import collect_metrics
-    m = collect_metrics(df)
-    # {'output_rows_scan': ..., 'bytes_scanned': ...,
-    #  'shuffle_bytes_written': ..., 'shuffle_bytes_read': ...,
-    #  'spill_bytes': ..., 'n_rows': ...}
+      from big_data_co2_emission_analysis_spark.plans.metrics import collect_metrics
+      m = collect_metrics(df)
+      # {'output_rows_scan': ..., 'bytes_scanned': ...,
+      #  'shuffle_bytes_written': ..., 'shuffle_bytes_read': ...,
+      #  'spill_bytes': ..., 'n_rows': ...}
+
+- ``_ledger`` runs a thunk and returns the jobs and completed stages
+  it ran, read from Spark's in-process status store;
+  ``collect_metrics_all_jobs`` (whole action) and
+  ``collect_metrics_per_batch`` (per micro-batch) sum its stages.
+- ``sweep`` / ``timed`` / ``warm_series`` are the warm-run protocol of
+  bench.py and tools/: a sweep (release pinned blocks + JVM GC) off the
+  clock before every warm run.
 """
 
 from __future__ import annotations
 
+import json
+import re
+import time
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
+
+from ..session import release_pinned
 
 #: metric-name fragments -> aggregate key
 _METRIC_KEYS = {
@@ -93,105 +108,57 @@ _STAGE_FIELDS = {
 }
 
 
-def _drain_listener_bus(spark, timeout_ms: int = 10_000) -> None:
+def _drain_listener_bus(spark) -> None:
     """Block until the async ``appStatus`` listener queue is empty.
 
-    The AppStatusStore is fed by a listener on an async bus; stage-
-    completed events can lag ``df.collect()`` returning.  Reading the
-    store without draining can (a) read the watermark too LOW, so a
-    prior query's late-arriving stages get attributed to this one, and
-    (b) miss this query's own trailing stages (undercount) -- silently
-    skewing the PROFILE_*/SCALING whole-action sums even under the
-    documented serial usage.  ``waitUntilEmpty`` is the same barrier
-    Spark's own tests use.  Best-effort: the py4j surface moving is not
-    a reason to fail the measurement."""
+    The AppStatusStore is fed by a listener on an async bus; job- and
+    stage-completed events can lag ``df.collect()`` returning, so a
+    store read without draining misses the call's trailing stages.
+    ``waitUntilEmpty`` is the same barrier Spark's own tests use."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
     try:
-        bus = spark.sparkContext._jsc.sc().listenerBus()
-        try:
-            bus.waitUntilEmpty(timeout_ms)
-        except Exception:
-            # py4j raises Py4JError (not TypeError) when the long-arg
-            # overload is absent; catch broadly so the no-arg Spark-4
-            # signature actually gets tried instead of silently
-            # no-opping through the outer best-effort guard.
-            bus.waitUntilEmpty()
-    except Exception:
-        pass
+        bus.waitUntilEmpty(10_000)
+    except Py4JError:  # the one-argument overload is absent on some builds
+        bus.waitUntilEmpty()
 
 
-def _completed_stages(spark) -> list[dict]:
-    """Completed-stage metric rows as plain dicts keyed like the REST
-    v1 StageData.  Primary source is the in-process AppStatusStore
-    (works with ``spark.ui.enabled=false``, the engine default); the
-    HTTP REST API is the fallback when the py4j surface moves but a UI
-    is up."""
-    sc = spark.sparkContext
-    try:
-        store = sc._jsc.sc().statusStore()
-        jvm = spark._jvm
-        stages = store.stageList(
-            jvm.java.util.ArrayList(),  # all statuses; filtered below
-            False,
-            False,
-            sc._gateway.new_array(jvm.double, 0),
-            jvm.java.util.ArrayList(),
-        )
-        out = []
-        it = stages.iterator()
-        while it.hasNext():
-            s = it.next()
-            if str(s.status()) != "COMPLETE":
-                continue
-            out.append(
-                {
-                    "stageId": s.stageId(),
-                    "inputRecords": s.inputRecords(),
-                    "inputBytes": s.inputBytes(),
-                    "shuffleWriteBytes": s.shuffleWriteBytes(),
-                    "shuffleReadBytes": s.shuffleReadBytes(),
-                    "diskBytesSpilled": s.diskBytesSpilled(),
-                    "executorRunTime": s.executorRunTime(),
-                    "executorCpuTime": s.executorCpuTime(),
-                }
-            )
-        return out
-    except Exception:
-        pass  # py4j surface moved -- try HTTP below
-    import json
-    import urllib.request
+def _ledger(spark, thunk) -> tuple[object, list[dict], list[dict]]:
+    """Run ``thunk`` and return ``(result, jobs, stages)``: the status
+    store's JobData rows for every job it ran and the StageData rows of
+    every stage attempt it completed, as REST-v1-shaped dicts.
 
-    base = sc.uiWebUrl
-    app = sc.applicationId
-    with urllib.request.urlopen(
-        f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=10
-    ) as r:
-        return json.load(r)
-
-
-def _completed_jobs(spark) -> list[dict]:
-    """Succeeded-job rows (jobId, description, stageIds) from the
-    in-process AppStatusStore.  Streaming micro-batch jobs carry the
-    batch id in their description (MicroBatchExecution sets the job
-    description per trigger), which is what lets per-batch work
-    attribution map stages back to batches."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
+    Attribution is by id: the DAG scheduler's next job and stage ids
+    taken before and after the call bound what it submitted, including
+    jobs the thunk runs while it BUILDS its DataFrame (eager
+    checkpoints, control-plane collects).  Correct whenever calls run
+    serially in the session; concurrent calls would cross-attribute.
+    Skipped stages (reused exchanges) never complete, so reuse shows as
+    fewer stages.  The store is read once per list, in-process (no UI
+    needed), after the listener bus is drained."""
+    jsc = spark.sparkContext._jsc.sc()
+    dag = jsc.dagScheduler()
+    j0, s0 = int(dag.nextJobId()), int(dag.nextStageId())
+    result = thunk()
+    j1, s1 = int(dag.nextJobId()), int(dag.nextStageId())
+    _drain_listener_bus(spark)
     jvm = spark._jvm
-    jobs = store.jobsList(jvm.java.util.ArrayList())
-    out = []
-    it = jobs.iterator()
-    while it.hasNext():
-        j = it.next()
-        if str(j.status()) != "SUCCEEDED":
-            continue
-        desc = j.description()
-        desc = str(desc.get()) if desc.isDefined() else ""
-        sids = []
-        sit = j.stageIds().iterator()
-        while sit.hasNext():
-            sids.append(int(str(sit.next())))
-        out.append({"jobId": int(j.jobId()), "description": desc, "stageIds": sids})
-    return out
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala, "MODULE$"))
+    store = jsc.statusStore()
+    any_status = jvm.java.util.ArrayList()  # empty filter: every status
+    no_quantiles = spark.sparkContext._gateway.new_array(jvm.double, 0)
+    jobs = json.loads(mapper.writeValueAsString(store.jobsList(any_status)))
+    stages = json.loads(
+        mapper.writeValueAsString(store.stageList(any_status, False, False, no_quantiles, any_status))
+    )
+    jobs = sorted((j for j in jobs if j0 <= j["jobId"] < j1), key=lambda j: j["jobId"])
+    stages = [s for s in stages if s0 <= s["stageId"] < s1 and s["status"] == "COMPLETE"]
+    return result, jobs, stages
+
+
+def _stage_sums(stages: list[dict]) -> dict:
+    return {key: sum(s[field] for s in stages) for field, key in _STAGE_FIELDS.items()}
 
 
 def collect_metrics_per_batch(thunk, spark) -> tuple[object, dict]:
@@ -200,44 +167,26 @@ def collect_metrics_per_batch(thunk, spark) -> tuple[object, dict]:
 
     Returns ``(thunk_result, batches)`` where ``batches`` maps batch id
     (int, or -1 for work not tagged with a batch -- source listing,
-    manifest maintenance, result collection) to the summed stage
-    metrics of the jobs whose description carries that batch id.  Same
-    stage-id-watermark discipline as :func:`collect_metrics_all_jobs`
-    (serial usage; drain the listener bus around the read), so the
-    per-batch rows sum to the whole-action totals.
+    manifest maintenance, result collection) to ``n_stages`` plus the
+    summed stage metrics of the jobs whose description carries that
+    batch id (MicroBatchExecution sets the job description per
+    trigger).  The rows partition the call's completed stages, so they
+    sum to the whole-action totals of :func:`collect_metrics_all_jobs`.
 
     Why: the streaming bench rows' wall cost is dominated by fixed
     micro-batch scheduling overhead, which masks real per-batch work
     regressions as the corpus grows (VERDICT r11 #5) -- a committed
     per-batch work table is the diffable baseline."""
-    import re as _re
-
-    _drain_listener_bus(spark)
-    watermark = max((s.get("stageId", -1) for s in _completed_stages(spark)), default=-1)
-    result = thunk()
-    _drain_listener_bus(spark)
-    stages = {
-        s["stageId"]: s for s in _completed_stages(spark) if s["stageId"] > watermark
-    }
-    batches: dict = {}
-    for job in _completed_jobs(spark):
-        m = _re.search(r"batch\s*=?\s*(\d+)", job["description"], _re.IGNORECASE)
-        key = int(m.group(1)) if m else -1
+    result, jobs, stages = _ledger(spark, thunk)
+    batch_of_stage: dict[int, int] = {}
+    for job in jobs:  # ascending ids: a stage belongs to the first job listing it
+        m = re.search(r"batch\s*=?\s*(\d+)", job.get("description") or "", re.IGNORECASE)
         for sid in job["stageIds"]:
-            s = stages.pop(sid, None)  # a stage belongs to exactly one job
-            if s is None:
-                continue
-            row = batches.setdefault(key, {"n_stages": 0})
-            row["n_stages"] += 1
-            for field, out_key in _STAGE_FIELDS.items():
-                row[out_key] = row.get(out_key, 0) + int(s.get(field, 0) or 0)
-    if stages:  # stages whose job row was evicted or untagged
-        row = batches.setdefault(-1, {"n_stages": 0})
-        row["n_stages"] += len(stages)
-        for s in stages.values():
-            for field, out_key in _STAGE_FIELDS.items():
-                row[out_key] = row.get(out_key, 0) + int(s.get(field, 0) or 0)
-    return result, batches
+            batch_of_stage.setdefault(sid, int(m.group(1)) if m else -1)
+    by_batch: dict[int, list[dict]] = {}
+    for s in stages:
+        by_batch.setdefault(batch_of_stage.get(s["stageId"], -1), []).append(s)
+    return result, {b: {"n_stages": len(ss), **_stage_sums(ss)} for b, ss in by_batch.items()}
 
 
 def collect_metrics_all_jobs(df_or_thunk, spark=None) -> dict:
@@ -250,22 +199,15 @@ def collect_metrics_all_jobs(df_or_thunk, spark=None) -> dict:
     Pass a ZERO-ARG CALLABLE returning the DataFrame whenever the
     query builder itself runs jobs (eager checkpoints, control-plane
     collects, persisted-count gates) -- those run at build time, so an
-    already-built DataFrame would hide them before the watermark is
-    recorded.  A plain DataFrame is accepted for build-free queries.
+    already-built DataFrame would hide them from the ledger.  A plain
+    DataFrame is accepted for build-free queries.
 
-    Attribution is by stage-id watermark over completed StageData (the
-    SCALING.md total-executor-work protocol; in-process AppStatusStore
-    first, HTTP REST as fallback): record the max completed stage id,
-    build+run the query, then sum the fields of stages with a LARGER
-    id -- robust to retained-stage eviction, correct whenever queries
-    run serially in the session (bench/profile/oracle loops;
-    concurrent queries would cross-attribute).
+    The sums run over the :func:`_ledger` stages of build + collect.
     ``bytes_scanned``/``output_rows_scan`` are executor INPUT totals
     (file reads + cached-block reads), so a checkpointing query counts
     both the original scan and the checkpoint re-reads -- the honest
-    whole-action I/O.  Skipped stages (reused exchanges) never
-    complete, so reuse still shows as fewer bytes.  Falls back to
-    :func:`collect_metrics` when no stage store is reachable."""
+    whole-action I/O.  A failed store read raises; it never falls back
+    to the plan walker, which measures something else."""
     thunk = df_or_thunk if callable(df_or_thunk) else (lambda: df_or_thunk)
     if spark is None:
         if callable(df_or_thunk):
@@ -275,38 +217,52 @@ def collect_metrics_all_jobs(df_or_thunk, spark=None) -> dict:
             if spark is None:
                 raise RuntimeError(
                     "collect_metrics_all_jobs(thunk) needs an active session "
-                    "(or pass spark=) to read the stage watermark BEFORE the build"
+                    "(or pass spark=) to mark the job ids BEFORE the build"
                 )
         else:
             spark = df_or_thunk.sparkSession
-    try:
-        _drain_listener_bus(spark)
-        watermark = max(
-            (s.get("stageId", -1) for s in _completed_stages(spark)), default=-1
-        )
-    except Exception:
-        return collect_metrics(thunk())
-    df = thunk()
-    rows = df.collect()
-    out: dict = {"n_rows": len(rows)}
-    _drain_listener_bus(spark)
-    try:
-        stages = _completed_stages(spark)
-    except Exception:  # pragma: no cover - stage store vanished mid-run
-        # Do NOT re-collect (that would re-execute a possibly corpus-
-        # scale query just to walk the plan) -- walk the final executed
-        # plan directly with the row count already in hand.
-        plan = df._jdf.queryExecution().executedPlan()
-        _walk(plan, out)
-        return out
-    for s in stages:
-        if s.get("stageId", -1) <= watermark:
-            continue
-        for field, key in _STAGE_FIELDS.items():
-            out[key] = out.get(key, 0) + int(s.get(field, 0) or 0)
+    rows, _, stages = _ledger(spark, lambda: thunk().collect())
+    out = {"n_rows": len(rows), **_stage_sums(stages)}
     # key-compatibility with the plan walker's consumers
-    out.setdefault("output_rows_total", out.get("output_rows_scan", 0))
+    out["output_rows_total"] = out["output_rows_scan"]
     return out
+
+
+def sweep(spark) -> None:
+    """The between-runs sweep of the warm protocol, off the clock.
+
+    Drops operator-internal persisted data (SQL caches AND RDD-level
+    localCheckpoint blocks, :func:`session.release_pinned`) so every
+    warm run redoes ALL data work and only reuses compiled code."""
+    release_pinned(spark)
+    # Force a JVM GC so ContextCleaner promptly releases dead shuffle
+    # files/metadata from the previous execution.  Spark itself only
+    # forces one every 30 min (spark.cleaner.periodicGC.interval), and
+    # on a large driver heap (32g at sf10) ordinary GC never fires --
+    # measured effect of skipping this: after ~200 executions the
+    # shuffle-heaviest query (ngram_jaccard_pairs, sized 319-partition
+    # exchanges) crept 47->89->100 s across its own warm iterations in
+    # the full sf10 bench while running flat at ~34 s in a fresh JVM.
+    spark._jvm.System.gc()
+
+
+def timed(run) -> float:
+    """Seconds ``run()`` takes, rounded to the millisecond."""
+    t0 = time.perf_counter()
+    run()
+    return round(time.perf_counter() - t0, 3)
+
+
+def warm_series(spark, run, n: int) -> list[float]:
+    """The warm-iteration protocol: ``n`` x (:func:`sweep`, timed
+    ``run()``), then a final sweep so the next caller starts clean.
+    Take ``statistics.median`` of the series as the headline number."""
+    series = []
+    for _ in range(n):
+        sweep(spark)
+        series.append(timed(run))
+    sweep(spark)
+    return series
 
 
 def observe_quality(

@@ -102,7 +102,10 @@ def read_co2_csv(spark: SparkSession, path: str, edited: bool = True) -> DataFra
     export (``co2-dataset.csv``): two metadata lines + blank lines before
     the header.  The raw path stays DataFrame-native -- read as text,
     drop preamble lines, parse with ``from_csv`` -- no driver-side loop,
-    so it scales to arbitrarily many files.
+    so it scales to arbitrarily many files.  Any preamble or header line
+    may start with a UTF-8 BOM: the text reader drops one only at the
+    start of a file, and with the metadata lines prepended the edited
+    file's BOM'd header sits below them.
     """
     if edited:
         return read_csv(spark, path, schema=CO2_WIDE_SCHEMA, header=True)
@@ -110,7 +113,7 @@ def read_co2_csv(spark: SparkSession, path: str, edited: bool = True) -> DataFra
     ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in CO2_WIDE_SCHEMA)
     lines = spark.read.text(path)
     data = lines.filter(
-        ~F.col("value").rlike('^"?(Data Source|Last Updated Date|Country Name)')
+        ~F.col("value").rlike(r'^\uFEFF?"?(Data Source|Last Updated Date|Country Name)')
         & (F.trim(F.col("value")) != "")
     )
     parsed = data.select(F.from_csv(F.col("value"), ddl).alias("r")).select("r.*")

@@ -235,3 +235,97 @@ def test_collect_metrics_all_jobs_sees_through_checkpoints(spark, sf_dir, tmp_pa
     n_lineitem = spark.read.parquet(src).count()
     assert all_jobs["bytes_scanned"] > 0
     assert all_jobs["output_rows_scan"] >= n_lineitem
+
+
+def test_ledger_holds_exactly_the_thunks_jobs_and_stages(spark):
+    """The ledger attributes by job/stage id: a job run before the call
+    is not in it, a job the thunk runs while BUILDING its frame (an
+    eager localCheckpoint) is."""
+    from pyspark.sql import functions as F
+
+    from big_data_co2_emission_analysis_spark.plans.metrics import _ledger
+    from big_data_co2_emission_analysis_spark.session import release_pinned
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    tracker = spark.sparkContext.statusTracker()
+    spark.range(100).groupBy((F.col("id") % 3).alias("k")).count().collect()
+    before_job = int(dag.nextJobId()) - 1
+    j0 = int(dag.nextJobId())
+
+    def thunk():
+        cp = spark.range(1000).repartition(4).localCheckpoint(eager=True)
+        build_job = int(dag.nextJobId()) - 1
+        return build_job, cp.groupBy((F.col("id") % 7).alias("k")).count().collect()
+
+    (build_job, rows), jobs, stages = _ledger(spark, thunk)
+    j1 = int(dag.nextJobId())
+    release_pinned(spark)
+    assert len(rows) == 7
+    assert [j["jobId"] for j in jobs] == list(range(j0, j1))
+    assert j0 <= build_job < j1
+    assert before_job not in {j["jobId"] for j in jobs}
+    own_stages = {sid for j in jobs for sid in j["stageIds"]}
+    stage_ids = [s["stageId"] for s in stages]
+    assert len(stage_ids) == len(set(stage_ids)) == sum(j["numCompletedStages"] for j in jobs)
+    assert set(stage_ids) <= own_stages
+    assert not set(stage_ids) & set(tracker.getJobInfo(before_job).stageIds)
+    build_stages = set(next(j for j in jobs if j["jobId"] == build_job)["stageIds"])
+    assert build_stages & set(stage_ids)  # the build-time checkpoint's work is counted
+
+
+def test_warm_series_sweeps_before_every_run(spark):
+    """The warm protocol: pinned blocks made before the series are
+    released before the first timed run, every run starts with no
+    persistent RDD, and each sweep forces a JVM GC."""
+    from big_data_co2_emission_analysis_spark.plans.metrics import warm_series
+
+    jsc = spark.sparkContext._jsc
+    gc_beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+
+    def gc_count() -> int:
+        return sum(max(0, int(b.getCollectionCount())) for b in gc_beans)
+
+    spark.range(100).localCheckpoint(eager=True)
+    assert jsc.getPersistentRDDs().size() >= 1
+    pinned_at_start = []
+
+    def run():
+        pinned_at_start.append(int(jsc.getPersistentRDDs().size()))
+        spark.range(1000).localCheckpoint(eager=True).count()  # pins a block
+
+    gcs = gc_count()
+    series = warm_series(spark, run, 3)
+    assert pinned_at_start == [0, 0, 0]
+    assert len(series) == 3 and all(t >= 0 for t in series)
+    assert jsc.getPersistentRDDs().size() == 0  # the final sweep
+    assert gc_count() - gcs >= 4
+
+
+def test_collect_metrics_per_batch_rows_partition_the_ledger(spark, tmp_path):
+    """One row per micro-batch id (plus -1 for untagged work); the
+    per-batch stage counts sum to the whole call's ledger."""
+    from pyspark.sql import functions as F
+
+    from big_data_co2_emission_analysis_spark.plans.metrics import (
+        _ledger,
+        collect_metrics_per_batch,
+    )
+    from big_data_co2_emission_analysis_spark.session import release_pinned
+    from big_data_co2_emission_analysis_spark.streaming.windows import run_to_completion
+
+    src = str(tmp_path / "src")
+    for i in range(3):
+        spark.range(i * 100, (i + 1) * 100).coalesce(1).write.mode("append").parquet(src)
+    progress: list = []
+
+    def thunk():
+        stream = spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(src)
+        agg = stream.groupBy((F.col("id") % 5).alias("k")).count()
+        return run_to_completion(agg, "complete", progress_out=progress).count()
+
+    (n_keys, batches), _, stages = _ledger(spark, lambda: collect_metrics_per_batch(thunk, spark))
+    release_pinned(spark)
+    assert n_keys == 5
+    assert set(batches) - {-1} == {p["batchId"] for p in progress} == {0, 1, 2}
+    assert sum(b["n_stages"] for b in batches.values()) == len(stages)
+    assert sum(b["output_rows_scan"] for b in batches.values()) >= 300

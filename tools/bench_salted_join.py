@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -31,11 +32,6 @@ N_KEYS = 100_000
 N_RIGHT = 100_000
 HOT_SHARE_MOD = 5  # id % 5 != 0 -> hot key: 80% of rows on key 0
 ITERS = 3
-
-
-def median(xs):
-    s = sorted(xs)
-    return s[len(s) // 2]
 
 
 def main() -> None:
@@ -78,7 +74,7 @@ def main() -> None:
             t0 = time.perf_counter()
             fn().write.format("noop").mode("overwrite").save()
             runs.append(round(time.perf_counter() - t0, 3))
-        return median(runs), runs
+        return statistics.median(runs), runs
 
     results: dict[str, dict] = {}
     for side_name, left in (("skewed", skewed), ("uniform", uniform)):

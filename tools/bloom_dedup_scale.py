@@ -31,29 +31,8 @@ import shutil
 import statistics
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _shuffle_write_bytes(spark) -> int | None:
-    """Cumulative shuffle-write bytes across completed stages, via the
-    local UI REST API -- diffed around each timed run to attribute
-    bytes per batch.  Local[32] wall-clock hides the shuffle (same
-    process, page cache); BYTES are the cluster-scale cost driver:
-    every one crosses the network and hits shuffle disks there."""
-    import urllib.request
-
-    try:
-        base = spark.sparkContext.uiWebUrl
-        app = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=10
-        ) as r:
-            stages = json.load(r)
-        return sum(s.get("shuffleWriteBytes", 0) for s in stages)
-    except Exception:
-        return None
 
 
 def main() -> None:
@@ -77,6 +56,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from big_data_co2_emission_analysis_spark.plans.metrics import _ledger, timed
     from big_data_co2_emission_analysis_spark.streaming.windows import (
         incremental_dedup_batch,
     )
@@ -143,13 +123,13 @@ def main() -> None:
             counts: dict[str, int] = {}
             for rep in range(args.reps):
                 for label, kw in variants:
-                    sb0 = _shuffle_write_bytes(spark)
-                    t0 = time.time()
-                    incremental_dedup_batch(batch, 1, manifest, out, **kw)
-                    timings[label].append(time.time() - t0)
-                    sb1 = _shuffle_write_bytes(spark)
-                    if sb0 is not None and sb1 is not None and sb1 >= sb0:
-                        shuffle_b[label].append(sb1 - sb0)
+                    # shuffle BYTES, not local wall-clock, are the
+                    # cluster-scale cost: each one crosses the network
+                    sec, _, stages = _ledger(
+                        spark, lambda: timed(lambda: incremental_dedup_batch(batch, 1, manifest, out, **kw))
+                    )
+                    timings[label].append(sec)
+                    shuffle_b[label].append(sum(s["shuffleWriteBytes"] for s in stages))
                     counts[label] = (
                         spark.read.parquet(out)
                         .filter(F.col("batch_id") == 1)
@@ -167,11 +147,8 @@ def main() -> None:
             }
             for label, _ in variants:
                 point[f"{label}_sec"] = round(statistics.median(timings[label]), 3)
-                point[f"{label}_all"] = [round(t, 3) for t in timings[label]]
-                if shuffle_b[label]:
-                    point[f"{label}_shuffle_mb"] = round(
-                        statistics.median(shuffle_b[label]) / 1e6, 2
-                    )
+                point[f"{label}_all"] = timings[label]
+                point[f"{label}_shuffle_mb"] = round(statistics.median(shuffle_b[label]) / 1e6, 2)
             points.append(point)
             print(json.dumps(points[-1]), flush=True)
         finally:

@@ -34,13 +34,13 @@ def fmt_bytes(n: int) -> str:
 def main() -> None:
     from bench import HEADLINE
 
-    from big_data_co2_emission_analysis_spark.plans.metrics import collect_metrics_all_jobs
+    from big_data_co2_emission_analysis_spark.plans.metrics import collect_metrics_all_jobs, sweep
     from big_data_co2_emission_analysis_spark.queries import all_queries
     from big_data_co2_emission_analysis_spark.queries.advanced import (
         ensure_bucketed_tables,
         ensure_partitioned_orders,
     )
-    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
+    from big_data_co2_emission_analysis_spark.session import get_session
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out_path = sys.argv[2] if len(sys.argv) > 2 else str(ROOT / "PROFILE.md")
@@ -55,7 +55,7 @@ def main() -> None:
         m = collect_metrics_all_jobs(lambda: qs[name].fn(spark, sf_dir), spark=spark)
         sec = time.perf_counter() - t0
         rows.append((name, sec, m))
-        release_pinned(spark)
+        sweep(spark)
         print(f"# {name}: {sec:.2f}s {m}", file=sys.stderr)
 
     out = [
@@ -65,8 +65,8 @@ def main() -> None:
         "Each row is one full COLD execution (includes Catalyst analysis +",
         "codegen compile; see BENCH_r*.json for warm timings — the bytes/rows",
         "columns, the point of this file, are identical either way).",
-        "Metrics are summed over EVERY stage the action ran (stage-id",
-        "watermark through the UI REST API — the r10 attribution fix), so",
+        "Metrics are summed over EVERY stage the action ran (stage ids read",
+        "in-process from Spark's status store — the r10 attribution fix), so",
         "jobs behind localCheckpoint/persist materializations are counted:",
         "`scan rows/bytes` are executor INPUT totals (file reads + cached-",
         "block re-reads), shuffle columns are stage shuffle bytes — so",

@@ -15,8 +15,8 @@ engine).
 
 from __future__ import annotations
 
+import statistics
 import sys
-import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -26,9 +26,9 @@ from pyspark.sql import functions as F  # noqa: E402
 
 
 def main() -> None:
-    from big_data_co2_emission_analysis_spark.plans.metrics import collect_metrics
+    from big_data_co2_emission_analysis_spark.plans.metrics import collect_metrics, warm_series
     from big_data_co2_emission_analysis_spark.queries import mlops
-    from big_data_co2_emission_analysis_spark.session import get_session, release_pinned
+    from big_data_co2_emission_analysis_spark.session import get_session
 
     sf_dirs = sys.argv[1:] or [
         "/root/testdata/sf0.1",
@@ -40,15 +40,12 @@ def main() -> None:
         # build-once warm-up (quantizer + det-kmeans caches), off the clock
         mlops._bigk_assignments(spark, sf_dir)
         stats = mlops.semdedup_bigk_cluster_stats(spark, sf_dir).collect()[0]
-        iters = []
-        for _ in range(3):
-            release_pinned(spark)
-            t0 = time.perf_counter()
-            mlops.semdedup_pairs_bigk(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            iters.append(round(time.perf_counter() - t0, 2))
-        med = sorted(iters)[1]
+        iters = warm_series(
+            spark,
+            lambda: mlops.semdedup_pairs_bigk(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+            3,
+        )
+        med = statistics.median(iters)
         m = collect_metrics(
             mlops.semdedup_pairs_bigk(spark, sf_dir).agg(
                 F.count(F.lit(1)).alias("n_pairs")
