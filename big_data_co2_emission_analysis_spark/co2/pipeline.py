@@ -9,6 +9,14 @@ Same semantics, different engineering:
   the reference re-executes the full CSV lineage per action
   (reference project-co2.py:123-124,187-226 -- SURVEY.md section 4
   calls this out as the single biggest practical fix).
+- The cached table is ONE partition when the CSV is small (up to
+  ``_ONE_PARTITION_MAX_BYTES``, and never more than one Spark file split):
+  a few hundred countries is what the reference runs on
+  ``SparkContext("local")`` (project-co2.py:80).  Every aggregate, sort
+  and MLlib summary downstream then plans no exchange, and the seeded
+  k-means sample no longer depends on how many splits the file got.
+  Above that the file's own partitioning is kept (see :func:`load_clean`
+  for the crossover).
 - The `num_increased` copy-paste bug (reference project-co2.py:211
   counts the *reduced* side) is implemented fixed, as the submission
   variant does.
@@ -28,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml.clustering import assemble_features, cluster_summary, fit_kmeans, silhouette
-from ..sources.readers import read_co2_csv
+from ..sources.readers import read_co2_csv, table_nbytes
 
 REFERENCE_CSV = "/root/reference/co2-dataset-edited.csv"
 BASE_YEAR, TARGET_YEAR = "2004", "2014"
@@ -60,10 +68,49 @@ def derive(df: DataFrame) -> DataFrame:
     )
 
 
+#: Largest CSV ``load_clean`` keeps in one partition.  One partition
+#: saves the exchanges and their jobs on every call; above this size one
+#: task parsing and scanning the whole table costs more (see load_clean).
+_ONE_PARTITION_MAX_BYTES = 32 << 20
+
+
+def _one_partition(spark: SparkSession, path: str) -> bool:
+    """True when the file (or directory) at ``path`` is at most
+    :data:`_ONE_PARTITION_MAX_BYTES` and at most the session's
+    ``spark.sql.files.maxPartitionBytes`` (the most bytes Spark reads in
+    one file split); False above either and for a non-local path."""
+    nbytes = table_nbytes(path)
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return nbytes is not None and nbytes <= min(_ONE_PARTITION_MAX_BYTES, split_bytes)
+
+
 def load_clean(spark: SparkSession, csv_path: str = REFERENCE_CSV) -> DataFrame:
     """CSV -> preprocess -> derive, cached (every analytic below reuses
-    this lineage; the reference re-reads the CSV per action)."""
-    return derive(preprocess(read_co2_csv(spark, csv_path))).cache()
+    this lineage; the reference re-reads the CSV per action).
+
+    Layout: a small CSV (:func:`_one_partition`) is coalesced to one
+    partition before the cache.  Spark may still read it in several
+    splits, but the cached table then reports a single partition, so
+    ``EnsureRequirements`` plans no ``Exchange`` (and AQE runs no stage
+    job) for any aggregate, sort or MLlib summary over it.  ``coalesce``,
+    not ``repartition(1)``: it is narrow and keeps file order, so a
+    seeded ``sample`` draws the same rows whatever the split count (a
+    ``repartition(1)`` reducer reads map outputs in fetch order).  Above
+    the threshold the file's splits are kept: one task would parse the
+    whole file, and build the features and the silhouette over it.
+
+    Crossover, warm ``co2_pipeline`` pass medians on 4 cores, one
+    partition / the file's splits (2 at 7.2 MiB, 4 above), passes
+    alternating (``tools/job_timeline.py --layout both co2``): 7.2 MiB
+    1.49 / 1.66 s, 14.4 MiB 1.75 / 1.90 s, 25 MiB 1.85 / 1.87 s, 36 MiB
+    2.04 / 2.18 s, 54 MiB 2.69 / 2.65 s, 108 MiB 3.80 / 3.22 s, 144 MiB
+    3.74 / 2.58 s, 215 MiB 4.66 / 3.03 s.  The threshold sits below the
+    break-even near 40-50 MiB.
+    """
+    clean = derive(preprocess(read_co2_csv(spark, csv_path)))
+    if _one_partition(spark, csv_path):
+        clean = clean.coalesce(1)
+    return clean.cache()
 
 
 # -- the six analytical queries (reference project-co2.py:184-226) --------
@@ -166,27 +213,35 @@ def run_pipeline(
 ) -> Co2PipelineResult:
     """End-to-end reproduction: ingest -> clean -> derive -> k-means ->
     analytics.  Fit on a 10% seed-42 sample like the reference
-    (project-co2.py:62-65); pass train_fraction=None for a full fit."""
-    raw = read_co2_csv(spark, csv_path)
-    n_raw = raw.count()
-    clean = derive(preprocess(raw)).cache()
+    (project-co2.py:62-65); pass train_fraction=None for a full fit.
+
+    The returned ``assigned`` frame stays cached (``cluster_ranges``
+    reads it); the intermediate ``clean`` and feature tables are
+    released once ``assigned`` is materialized.  Spark keys caches by
+    plan, so a caller's own cached ``load_clean`` of the same file is
+    that same entry and is released too."""
+    n_raw = read_co2_csv(spark, csv_path).count()
+    clean = load_clean(spark, csv_path)
     feats = assemble_features(clean, ["change", "isReduced"]).cache()
-
-    model = fit_kmeans(feats, k=k, seed=seed, sample_fraction=train_fraction)
-    assigned = model.transform(feats).cache()
-
-    n_reduced, n_increased = reduced_increased_counts(clean)
-    s_red, s_inc, s_tot = conditional_sums(clean)
-    return Co2PipelineResult(
-        n_raw=n_raw,
-        n_clean=clean.count(),
-        n_reduced=n_reduced,
-        n_increased=n_increased,
-        sum_reduced=s_red,
-        sum_increased=s_inc,
-        sum_total=s_tot,
-        silhouette=silhouette(assigned),
-        centroids=[[float(x) for x in c] for c in model.clusterCenters()],
-        cluster_ranges=cluster_summary(assigned),
-        assigned=assigned,
-    )
+    try:
+        model = fit_kmeans(feats, k=k, seed=seed, sample_fraction=train_fraction)
+        assigned = model.transform(feats).cache()
+        sil = silhouette(assigned)  # fills the cache before its inputs are released
+        n_reduced, n_increased = reduced_increased_counts(clean)
+        s_red, s_inc, s_tot = conditional_sums(clean)
+        return Co2PipelineResult(
+            n_raw=n_raw,
+            n_clean=clean.count(),
+            n_reduced=n_reduced,
+            n_increased=n_increased,
+            sum_reduced=s_red,
+            sum_increased=s_inc,
+            sum_total=s_tot,
+            silhouette=sil,
+            centroids=[[float(x) for x in c] for c in model.clusterCenters()],
+            cluster_ranges=cluster_summary(assigned),
+            assigned=assigned,
+        )
+    finally:
+        feats.unpersist()
+        clean.unpersist()

@@ -26,8 +26,11 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import arrow_transfer
 
 FIXTURE_PATH = os.path.abspath(
     os.path.join(os.path.dirname(__file__), "..", "..", "fixtures", "world_dim.parquet")
@@ -259,13 +262,19 @@ NATION_ISO: dict[str, str] = {
 def world_dim_df(spark: SparkSession) -> DataFrame:
     """The dimension as a (broadcastable) local relation, pre-patch.
 
+    Built from an Arrow-backed pandas frame with an explicit schema, so
+    the plan holds a ``LocalRelation``: the rows live in the plan and no
+    Python worker starts.  ``createDataFrame(list)`` would plan a
+    ``LogicalRDD`` over pickled rows and fork one.  ``arrow_transfer``
+    makes this independent of the caller's Arrow setting.
+
     Includes an opaque ``geometry_wkt`` payload column standing in for
     the polygon geometry (never computed on, exercises
     carry-a-wide-column-through-a-join).
     """
-    df = spark.createDataFrame(
-        WORLD_DIM, "iso_a3 string, name string, continent string, pop_est double"
-    )
+    rows = pd.DataFrame(WORLD_DIM, columns=["iso_a3", "name", "continent", "pop_est"])
+    with arrow_transfer(spark):
+        df = spark.createDataFrame(rows, "iso_a3 string, name string, continent string, pop_est double")
     return df.withColumn(
         "geometry_wkt",
         F.concat(F.lit("POINT ("), (F.crc32("name") % 360 - 180).cast("string"), F.lit(" 0)")),

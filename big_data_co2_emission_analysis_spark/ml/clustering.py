@@ -12,6 +12,14 @@ Differences from the reference, on purpose:
   (the evaluation path BigData_Mayur.py:42-46 demonstrates).
 - The cluster-label string is a native expression, not a Python UDF
   (reference U1, project-co2.py:130-132 -> X3 form).
+- Every fit pins ``solver="row"``, the solver ``auto`` picks here anyway.
+  Spark 4.1's ``KMeans.preferBlockSolver`` estimates density from the
+  *indices* of ``numNonZeros``' active entries instead of their counts,
+  so ``auto`` chooses the row solver for any input with more rows than
+  features -- but only after a Summarizer ``first()`` job (plus an AQE
+  stage job) per fit.  Pinning it gives bit-identical costs and centers
+  without that job; tests/test_clustering.py fails if a Spark upgrade
+  makes ``auto`` choose differently.
 """
 
 from __future__ import annotations
@@ -62,9 +70,13 @@ def elbow_sweep(
     properties and tags reach every fit's jobs.  Costs are the same as
     sequential fits: every fit reads the one cached sample (not
     repartitioned -- k-means|| initialisation depends on partition
-    indices) with the same seed.  Points come back in the order of
-    ``ks``.  If a fit raises, no further fit starts; the in-flight fits
-    finish, the sample is released, and the first error is re-raised."""
+    indices) with the same seed.  The sample is drawn per partition
+    (seed + partition index), so its rows depend on the partitioning:
+    over ``co2.pipeline.load_clean``'s one-partition table the costs no
+    longer depend on the core count or on how the CSV was split.  Points
+    come back in the order of ``ks``.  If a fit raises, no further fit
+    starts; the in-flight fits finish, the sample is released, and the
+    first error is re-raised."""
     from pyspark.ml.clustering import KMeans
     from pyspark.util import inheritable_thread_target
 
@@ -74,7 +86,7 @@ def elbow_sweep(
     train = df.sample(False, sample_fraction, seed=sample_seed) if sample_fraction else df
     train = train.cache()
     try:
-        est = KMeans(seed=seed, featuresCol=features_col)
+        est = KMeans(seed=seed, featuresCol=features_col, solver="row")
         models = est.fitMultiple(train, [{est.k: k} for k in ks])
         failed = threading.Event()
 
@@ -119,7 +131,8 @@ def fit_kmeans(
     from pyspark.ml.clustering import KMeans
 
     train = df.sample(False, sample_fraction, seed=sample_seed) if sample_fraction else df
-    return KMeans(k=k, seed=seed, featuresCol=features_col, predictionCol=prediction_col).fit(train)
+    est = KMeans(k=k, seed=seed, featuresCol=features_col, predictionCol=prediction_col, solver="row")
+    return est.fit(train)
 
 
 def silhouette(predictions: DataFrame, prediction_col: str = "cluster", features_col: str = "features") -> float:

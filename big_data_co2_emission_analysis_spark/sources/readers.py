@@ -31,13 +31,14 @@ TABLE_NAMES = (
 )
 
 def table_nbytes(path: str) -> "int | None":
-    """Local on-disk byte size of a parquet table (file or directory),
+    """Local on-disk byte size of a table (file or directory),
     skipping ``_``/``.``-prefixed metadata entries; ``None`` when the
     path is absent or non-local.
 
     This is the ONE copy of the filesystem byte-walk every byte-scaled
     gate uses (read_documents' explode-parallelism guard, the
-    distinct-rewrite / posting-exchange / bucket-count gates).  The
+    distinct-rewrite / posting-exchange / bucket-count gates, the co2
+    ``load_clean`` one-partition gate).  The
     metadata-skip rule lives here so the gates cannot diverge."""
     import os
 

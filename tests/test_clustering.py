@@ -7,7 +7,7 @@ cached sample released on success and on a failing fit."""
 import numpy as np
 import pytest
 
-from big_data_co2_emission_analysis_spark.ml.clustering import ElbowPoint, assemble_features, elbow_sweep
+from big_data_co2_emission_analysis_spark.ml.clustering import ElbowPoint, assemble_features, elbow_sweep, fit_kmeans
 
 SAMPLE_FRACTION, SAMPLE_SEED = 0.5, 42
 
@@ -54,6 +54,22 @@ def test_costs_bit_identical_to_sequential_fits_in_input_order(spark):
     try:
         ks = [4, 2, 3]
         assert _sweep(df, ks) == _sequential(df, ks)
+    finally:
+        df.unpersist()
+
+
+def test_fit_kmeans_row_solver_bit_identical_to_auto(spark):
+    # fit_kmeans pins the row solver that Spark's "auto" picks for more
+    # rows than features, without auto's Summarizer job.  If a Spark
+    # upgrade makes auto pick the block solver here, the bits differ.
+    from pyspark.ml.clustering import KMeans
+
+    df = _frame(spark, 1)
+    try:
+        model = fit_kmeans(df, k=5, seed=1, sample_fraction=SAMPLE_FRACTION, sample_seed=SAMPLE_SEED)
+        auto = KMeans(k=5, seed=1).fit(df.sample(False, SAMPLE_FRACTION, seed=SAMPLE_SEED))
+        assert model.summary.trainingCost == auto.summary.trainingCost
+        assert [c.tolist() for c in model.clusterCenters()] == [c.tolist() for c in auto.clusterCenters()]
     finally:
         df.unpersist()
 

@@ -11,12 +11,30 @@ fix is fewer jobs or overlapped jobs, not faster stages).
 
 e.g. ``SPARK_GRAFT_CPUS=4 python tools/job_timeline.py --sf
 perfbench/data/sf0.01 --warmups 2 bm25_eval_metrics``.
+
+The name ``co2`` instead runs the paper's pipeline: the ``co2_pipeline``
+benchmark workload's calls (perfbench/workloads.py, on a table written by
+perfbench/co2gen.py, both imported read-only), ``--warmups`` throwaway
+passes and then ``--passes`` measured ones, each followed by the
+benchmark's sweep.  It prints every call's median wall time and the
+jobs, stages and tasks it ran, and the pass totals:
+
+    SPARK_GRAFT_CPUS=4 python tools/job_timeline.py --warmups 3 --passes 5 co2
+    SPARK_GRAFT_CPUS=4 python tools/job_timeline.py --rows 300000 --layout both co2
+
+``--layout both`` forces ``load_clean``'s one-partition gate each way in
+alternating passes (the file splits stay Spark's), so both layouts see
+the same drift of the host's speed.
 """
 
 from __future__ import annotations
 
 import argparse
+import random
+import statistics
 import sys
+import tempfile
+import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
@@ -29,7 +47,14 @@ def main() -> None:
     ap.add_argument(
         "--warmups", type=int, default=1, help="swept throwaway runs before the measured one (0: none)"
     )
-    ap.add_argument("name")
+    ap.add_argument("--passes", type=int, default=5, help="co2: measured warm passes")
+    ap.add_argument("--rows", type=int, default=None, help="co2: generated rows (default: the benchmark's)")
+    ap.add_argument("--seed", type=int, default=11, help="co2: generator and call-order seed")
+    ap.add_argument(
+        "--layout", choices=("auto", "both"), default="auto",
+        help="co2: both = alternate passes between one partition and the file's splits",
+    )
+    ap.add_argument("name", help="registry row, or co2")
     args = ap.parse_args()
 
     from big_data_co2_emission_analysis_spark.plans.metrics import _ledger, timed, warm_series
@@ -38,6 +63,9 @@ def main() -> None:
 
     spark = get_session("job_timeline")
     spark.range(1000).selectExpr("sum(id)").collect()
+    if args.name == "co2":
+        co2_calls(spark, args)
+        return
     qs = all_queries()
 
     def run() -> None:
@@ -78,6 +106,72 @@ def main() -> None:
         f"sum(inter-job gaps)={total_gap:.3f}s, "
         f"span={rows[-1][2] - t0:.3f}s"
     )
+
+
+def co2_calls(spark, args) -> None:
+    """Per-call jobs of the ``co2_pipeline`` workload's warm passes."""
+    from big_data_co2_emission_analysis_spark.co2 import pipeline as P
+    from big_data_co2_emission_analysis_spark.plans.metrics import _ledger, sweep
+
+    sys.path.insert(0, str(ROOT / "perfbench"))
+    import workloads
+
+    layouts = ("one", "splits") if args.layout == "both" else ("auto",)
+
+    def run(call):
+        t0 = time.perf_counter()
+        value = call.run()
+        return time.perf_counter() - t0, value
+
+    with tempfile.TemporaryDirectory() as work:
+        wl = workloads.Co2Pipeline(spark, work, args.seed, n_rows=args.rows or workloads.CO2_ROWS)
+        wl.prepare(0)
+        wl.build_key()
+        size_mb = wl.input_bytes() / (1 << 20)
+        splits = spark.read.text(wl.csv).rdd.getNumPartitions()
+        one_partition = {"one": True, "splits": False, "auto": P._one_partition(spark, wl.csv)}
+        rng = random.Random(args.seed)
+        # per layout: call name -> [(wall, jobs, stages, tasks)], and pass totals
+        calls = {lay: {} for lay in layouts}
+        pass_s = {lay: [] for lay in layouts}
+        failed = set()
+        for i in range((args.warmups + args.passes) * len(layouts)):
+            lay = layouts[i % len(layouts)]
+            if lay != "auto":
+                P._one_partition = lambda *_, one=one_partition[lay]: one
+            measured = i >= args.warmups * len(layouts)
+            total = 0.0
+            for call in wl.calls(rng):
+                (wall, value), jobs, stages = _ledger(spark, lambda: run(call))
+                if not call.check(value):
+                    failed.add(call.name)
+                total += wall
+                if measured:
+                    tasks = sum(s["numTasks"] for s in stages)
+                    calls[lay].setdefault(call.name, []).append((wall, len(jobs), len(stages), tasks))
+            sweep(spark)
+            if measured:
+                pass_s[lay].append(total)
+
+    print(f"# co2: {wl.n_rows} rows ({size_mb:.1f} MiB, {splits} file splits), {args.passes} warm passes")
+    for lay in layouts:
+        print(f"# load_clean layout: {'one partition' if one_partition[lay] else 'file splits'}")
+        print(f"{'call':<26} {'wall_s':>7} {'jobs':>5} {'stages':>6} {'tasks':>6}")
+        sums = [0, 0, 0]
+        for name, runs in calls[lay].items():
+            # job, stage and task counts of the last pass; they repeat per pass
+            _, n_jobs, n_stages, n_tasks = runs[-1]
+            sums = [sums[0] + n_jobs, sums[1] + n_stages, sums[2] + n_tasks]
+            print(f"{name:<26} {statistics.median(r[0] for r in runs):>7.3f} {n_jobs:>5} {n_stages:>6} {n_tasks:>6}")
+        ps = pass_s[lay]
+        print(f"# pass_s median={statistics.median(ps):.3f} [{min(ps):.3f}, {max(ps):.3f}], "
+              f"per pass: {sums[0]} jobs, {sums[1]} stages, {sums[2]} tasks")
+    if len(layouts) == 2:
+        wins = sum(a < b for a, b in zip(pass_s["one"], pass_s["splits"]))
+        print(f"# one partition faster in {wins}/{args.passes} adjacent pass pairs")
+    if failed:
+        print(f"# FAILED checks: {sorted(failed)}", file=sys.stderr)
+        sys.exit(1)
 
 
 if __name__ == "__main__":
