@@ -9,9 +9,8 @@ Same semantics, different engineering:
   the reference re-executes the full CSV lineage per action
   (reference project-co2.py:123-124,187-226 -- SURVEY.md section 4
   calls this out as the single biggest practical fix).
-- The cached table is ONE partition when the CSV is small (up to
-  ``_ONE_PARTITION_MAX_BYTES``, and never more than one Spark file split):
-  a few hundred countries is what the reference runs on
+- The cached table is ONE partition when the CSV is small (at most
+  ``_ONE_PARTITION_MAX_BYTES``, 32 MiB): a few hundred countries is what the reference runs on
   ``SparkContext("local")`` (project-co2.py:80).  Every aggregate, sort
   and MLlib summary downstream then plans no exchange, and the seeded
   k-means sample no longer depends on how many splits the file got.
@@ -32,6 +31,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,14 +74,18 @@ def derive(df: DataFrame) -> DataFrame:
 _ONE_PARTITION_MAX_BYTES = 32 << 20
 
 
-def _one_partition(spark: SparkSession, path: str) -> bool:
+def _one_partition(path: str) -> bool:
     """True when the file (or directory) at ``path`` is at most
-    :data:`_ONE_PARTITION_MAX_BYTES` and at most the session's
-    ``spark.sql.files.maxPartitionBytes`` (the most bytes Spark reads in
-    one file split); False above either and for a non-local path."""
+    :data:`_ONE_PARTITION_MAX_BYTES`; False above it and for a non-local
+    path."""
     nbytes = table_nbytes(path)
-    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    return nbytes is not None and nbytes <= min(_ONE_PARTITION_MAX_BYTES, split_bytes)
+    return nbytes is not None and nbytes <= _ONE_PARTITION_MAX_BYTES
+
+
+def _cleaned(spark: SparkSession, csv_path: str) -> DataFrame:
+    """:func:`load_clean`'s frame before the cache."""
+    clean = derive(preprocess(read_co2_csv(spark, csv_path)))
+    return clean.coalesce(1) if _one_partition(csv_path) else clean
 
 
 def load_clean(spark: SparkSession, csv_path: str = REFERENCE_CSV) -> DataFrame:
@@ -107,10 +111,7 @@ def load_clean(spark: SparkSession, csv_path: str = REFERENCE_CSV) -> DataFrame:
     3.74 / 2.58 s, 215 MiB 4.66 / 3.03 s.  The threshold sits below the
     break-even near 40-50 MiB.
     """
-    clean = derive(preprocess(read_co2_csv(spark, csv_path)))
-    if _one_partition(spark, csv_path):
-        clean = clean.coalesce(1)
-    return clean.cache()
+    return _cleaned(spark, csv_path).cache()
 
 
 # -- the six analytical queries (reference project-co2.py:184-226) --------
@@ -218,11 +219,11 @@ def run_pipeline(
     The returned ``assigned`` frame stays cached (``cluster_ranges``
     reads it); the intermediate ``clean`` and feature tables are
     released once ``assigned`` is materialized.  Spark keys caches by
-    plan, so a caller's own cached ``load_clean`` of the same file is
-    that same entry and is released too."""
+    plan, so when the caller already cached the same table (its own
+    ``load_clean`` of the file) that entry is the caller's and stays."""
     n_raw = read_co2_csv(spark, csv_path).count()
-    clean = load_clean(spark, csv_path)
-    feats = assemble_features(clean, ["change", "isReduced"]).cache()
+    clean, release_clean = _cache_new(_cleaned(spark, csv_path))
+    feats, release_feats = _cache_new(assemble_features(clean, ["change", "isReduced"]))
     try:
         model = fit_kmeans(feats, k=k, seed=seed, sample_fraction=train_fraction)
         assigned = model.transform(feats).cache()
@@ -243,5 +244,14 @@ def run_pipeline(
             assigned=assigned,
         )
     finally:
-        feats.unpersist()
-        clean.unpersist()
+        if release_feats:
+            feats.unpersist()
+        if release_clean:
+            clean.unpersist()
+
+
+def _cache_new(df: DataFrame) -> tuple[DataFrame, bool]:
+    """``df.cache()`` and whether this call made the cache entry (False
+    when the session already caches the same plan)."""
+    new = df.storageLevel == StorageLevel.NONE
+    return df.cache(), new

@@ -181,6 +181,25 @@ def test_run_pipeline_matches_answer_key_and_keeps_only_assigned(spark, tmp_path
         res.assigned.unpersist()
 
 
+def test_run_pipeline_keeps_a_callers_cached_clean(spark, tmp_path):
+    # Spark keys caches by plan: the caller's load_clean of the same file
+    # is the entry run_pipeline would cache, and it is not run_pipeline's
+    # to release.
+    from pyspark import StorageLevel
+
+    path, key = _write_generated(tmp_path)
+    clean = P.load_clean(spark, path)
+    try:
+        assert clean.count() == key["n_clean"]
+        before = _pinned(spark)
+        res = P.run_pipeline(spark, path)
+        res.assigned.unpersist()
+        assert clean.storageLevel != StorageLevel.NONE
+        assert _pinned(spark) == before
+    finally:
+        clean.unpersist()
+
+
 #: cut a CSV of a few hundred KB into several file splits
 _SEVERAL_SPLITS = {"spark.sql.files.openCostInBytes": "1", "spark.sql.files.minPartitionNum": "4"}
 
@@ -222,21 +241,15 @@ def _sparse_file(path, nbytes):
     return str(path)
 
 
-def test_one_partition_gate_arithmetic(spark, tmp_path):
+def test_one_partition_gate_arithmetic(tmp_path):
     def one(name, nbytes):
-        return P._one_partition(spark, _sparse_file(tmp_path / name, nbytes))
+        return P._one_partition(_sparse_file(tmp_path / name, nbytes))
 
     limit = P._ONE_PARTITION_MAX_BYTES
-    assert limit <= spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     assert one("under.csv", limit - 1) and one("at.csv", limit)
     assert not one("over.csv", limit + 1)
-    # never more than one file split: a smaller split size binds instead
-    split = limit // 2
-    with _conf(spark, {"spark.sql.files.maxPartitionBytes": str(split)}):
-        assert one("split_under.csv", split - 1) and one("split_at.csv", split)
-        assert not one("split_over.csv", split + 1)
     # a missing (or non-local) path keeps the file's own splits
-    assert not P._one_partition(spark, str(tmp_path / "missing.csv"))
+    assert not P._one_partition(str(tmp_path / "missing.csv"))
 
 
 def _stages_per_job(spark, thunk):
@@ -250,23 +263,20 @@ def _stages_per_job(spark, thunk):
     return result, [len(j["stageIds"]) for j in jobs]
 
 
-@pytest.mark.parametrize("side", ["below", "above_threshold", "above_split_bytes"])
+@pytest.mark.parametrize("side", ["below", "above"])
 def test_one_partition_gate_plan_shape_and_answers(spark, tmp_path, monkeypatch, side):
-    """The small CSV is cut into several splits on every side.  Below
+    """The small CSV is cut into several splits on both sides.  Below
     the gate the cached table is one partition and the aggregate, the
-    sort and the k-means summary plan no exchange.  With the threshold,
-    or ``maxPartitionBytes``, under the file size the file's splits are
-    kept and each of them shuffles.  The answers are the key's on every
-    side."""
+    sort and the k-means summary plan no exchange.  With the threshold
+    under the file size the file's splits are kept and each of them
+    shuffles.  The answers are the key's on both sides."""
     from big_data_co2_emission_analysis_spark.ml import clustering as C
 
     path, key = _write_generated(tmp_path)
     nbytes = Path(path).stat().st_size
     confs = {"spark.sql.adaptive.enabled": "false", **_SEVERAL_SPLITS}
-    if side == "above_threshold":
+    if side == "above":
         monkeypatch.setattr(P, "_ONE_PARTITION_MAX_BYTES", nbytes - 1)
-    elif side == "above_split_bytes":
-        confs["spark.sql.files.maxPartitionBytes"] = str(nbytes // 4)
     with _conf(spark, confs):
         assert spark.read.csv(path).rdd.getNumPartitions() >= 2
         clean = P.load_clean(spark, path)

@@ -15,8 +15,8 @@ perfbench/data/sf0.01 --warmups 2 bm25_eval_metrics``.
 The name ``co2`` instead runs the paper's pipeline: the ``co2_pipeline``
 benchmark workload's calls (perfbench/workloads.py, on a table written by
 perfbench/co2gen.py, both imported read-only), ``--warmups`` throwaway
-passes and then ``--passes`` measured ones, each followed by the
-benchmark's sweep.  It prints every call's median wall time and the
+passes and then ``--passes`` measured ones under the warm protocol
+(``plans.metrics.warm_series``: a sweep before each pass).  It prints every call's median wall time and the
 jobs, stages and tasks it ran, and the pass totals:
 
     SPARK_GRAFT_CPUS=4 python tools/job_timeline.py --warmups 3 --passes 5 co2
@@ -30,15 +30,18 @@ the same drift of the host's speed.
 from __future__ import annotations
 
 import argparse
+import itertools
 import random
 import statistics
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(ROOT))
+
+#: co2: the generator and call-order seed (the benchmark's first seed)
+CO2_SEED = 11
 
 
 def main() -> None:
@@ -49,7 +52,6 @@ def main() -> None:
     )
     ap.add_argument("--passes", type=int, default=5, help="co2: measured warm passes")
     ap.add_argument("--rows", type=int, default=None, help="co2: generated rows (default: the benchmark's)")
-    ap.add_argument("--seed", type=int, default=11, help="co2: generator and call-order seed")
     ap.add_argument(
         "--layout", choices=("auto", "both"), default="auto",
         help="co2: both = alternate passes between one partition and the file's splits",
@@ -111,47 +113,48 @@ def main() -> None:
 def co2_calls(spark, args) -> None:
     """Per-call jobs of the ``co2_pipeline`` workload's warm passes."""
     from big_data_co2_emission_analysis_spark.co2 import pipeline as P
-    from big_data_co2_emission_analysis_spark.plans.metrics import _ledger, sweep
+    from big_data_co2_emission_analysis_spark.plans.metrics import _ledger, timed, warm_series
 
     sys.path.insert(0, str(ROOT / "perfbench"))
     import workloads
 
     layouts = ("one", "splits") if args.layout == "both" else ("auto",)
-
-    def run(call):
-        t0 = time.perf_counter()
-        value = call.run()
-        return time.perf_counter() - t0, value
+    # per layout: call name -> [(wall, jobs, stages, tasks)], and pass totals
+    calls = {lay: {} for lay in layouts}
+    pass_s = {lay: [] for lay in layouts}
+    failed = set()
 
     with tempfile.TemporaryDirectory() as work:
-        wl = workloads.Co2Pipeline(spark, work, args.seed, n_rows=args.rows or workloads.CO2_ROWS)
+        wl = workloads.Co2Pipeline(spark, work, CO2_SEED, n_rows=args.rows or workloads.CO2_ROWS)
         wl.prepare(0)
         wl.build_key()
         size_mb = wl.input_bytes() / (1 << 20)
         splits = spark.read.text(wl.csv).rdd.getNumPartitions()
-        one_partition = {"one": True, "splits": False, "auto": P._one_partition(spark, wl.csv)}
-        rng = random.Random(args.seed)
-        # per layout: call name -> [(wall, jobs, stages, tasks)], and pass totals
-        calls = {lay: {} for lay in layouts}
-        pass_s = {lay: [] for lay in layouts}
-        failed = set()
-        for i in range((args.warmups + args.passes) * len(layouts)):
-            lay = layouts[i % len(layouts)]
+        one_partition = {"one": True, "splits": False, "auto": P._one_partition(wl.csv)}
+        rng = random.Random(CO2_SEED)
+        passes = itertools.cycle(layouts)
+
+        def one_pass() -> None:
+            lay = next(passes)
             if lay != "auto":
-                P._one_partition = lambda *_, one=one_partition[lay]: one
-            measured = i >= args.warmups * len(layouts)
+                P._one_partition = lambda _path, one=one_partition[lay]: one
             total = 0.0
             for call in wl.calls(rng):
-                (wall, value), jobs, stages = _ledger(spark, lambda: run(call))
-                if not call.check(value):
+                value = []
+                wall, jobs, stages = _ledger(spark, lambda: timed(lambda: value.append(call.run())))
+                if not call.check(value[0]):
                     failed.add(call.name)
                 total += wall
-                if measured:
-                    tasks = sum(s["numTasks"] for s in stages)
-                    calls[lay].setdefault(call.name, []).append((wall, len(jobs), len(stages), tasks))
-            sweep(spark)
-            if measured:
-                pass_s[lay].append(total)
+                tasks = sum(s["numTasks"] for s in stages)
+                calls[lay].setdefault(call.name, []).append((wall, len(jobs), len(stages), tasks))
+            pass_s[lay].append(total)
+
+        # throwaway passes, then the measured ones, each after the warm sweep
+        warm_series(spark, one_pass, args.warmups * len(layouts))
+        for lay in layouts:
+            calls[lay].clear()
+            pass_s[lay].clear()
+        warm_series(spark, one_pass, args.passes * len(layouts))
 
     print(f"# co2: {wl.n_rows} rows ({size_mb:.1f} MiB, {splits} file splits), {args.passes} warm passes")
     for lay in layouts:
