@@ -572,6 +572,14 @@ def minhash_banded_bucket_stats(
     )
 
 
+#: broadcast envelope of ``minhash_banded_pairs``' candidate-id spine
+#: (slim path): the MEASURED count of distinct candidate doc ids (a
+#: count over the checkpointed pair blocks) at or below 4M ids (~32 MB
+#: hashed-relation) broadcasts into the signature semi-filter; above
+#: it the semi-filter shuffles.
+_BROADCAST_MAX_IDS = 4_000_000
+
+
 def minhash_banded_pairs(
     df: DataFrame,
     id_col: str,
@@ -581,9 +589,7 @@ def minhash_banded_pairs(
     shingle_n: int = 3,
     min_jaccard: float = 0.3,
     max_bucket_size: int | None = 256,
-    prune_verify: bool = True,
     slim_postings: bool = True,
-    broadcast_max_ids: int = 4_000_000,
 ) -> DataFrame:
     """Hand-rolled MinHash + LSH banding (Broder): shingle -> k minhash
     values -> b bands of r = k/b rows -> bucket on (band, band-hash) ->
@@ -628,18 +634,6 @@ def minhash_banded_pairs(
     whole hot loop runs in whole-stage codegen (11x faster than the
     nested-transform formulation at sf0.1).
 
-    ``prune_verify`` (r9) picks how exact verification gets its
-    shingle sets.  True (the scale default): semi-join-prune the
-    corpus to the candidate id spine and re-shingle just those docs
-    -- candidate-sized work, no corpus-wide shingle cache (at sf10
-    the cache build was the operator's costliest stage, ~270
-    executor-s).  False (small corpora): persist the corpus shingle
-    frame once and join it directly -- the prune chain's ~8 extra
-    small stages cost more than a tiny cache (measured: sf0.1 3.0 vs
-    4.8 s, sf1 5.3 vs 7.3 s, crossover between sf1 and sf10).
-    Registry callers gate it on the same byte sizing as
-    ``agg_partitions`` elsewhere; values are identical either way.
-
     ``slim_postings`` (r10) picks the bucket-exchange shape.  True
     (the scale default): slim (id, band, bucket) postings, candidate
     pairs dedup to one row BEFORE any signature work, and est_jaccard
@@ -653,33 +647,39 @@ def minhash_banded_pairs(
     signature bytes -- fixed by the eager checkpoints below; the
     semi-filter stays because the unfiltered rejoin's corpus-sized
     exchanges are exactly what a 1,000x corpus cannot afford.
-    False (small corpora): the signature rides the posting and
-    est_jaccard is computed inside the bucket expansion with NO joins
-    back -- on a tiny corpus the replicated signatures are a trivial
-    exchange and the two saved joins win (r9's ungated slim shape was
-    1.54x the r8 record at sf0.1).  Values are identical either way
-    (est_jaccard is a pure function of the two signatures; the
-    post-expansion groupBy dedupes the per-collision copies).  Gate
-    both knobs on the same corpus-byte sizing -- the
+    Exact verification on the slim shape (r9) semi-join-prunes the
+    corpus to the candidate id spine and re-shingles just those docs
+    -- candidate-sized work, no corpus-wide shingle cache (at sf10 the
+    cache build was the operator's costliest stage, ~270 executor-s).
+    ``slim_postings=False`` (small corpora): the signature rides the
+    posting, est_jaccard is computed inside the bucket expansion with
+    NO joins back, and verification joins one persisted corpus shingle
+    frame -- on a tiny corpus the replicated signatures are a trivial
+    exchange, the two saved joins win (r9's ungated slim shape was
+    1.54x the r8 record at sf0.1), and the prune chain's ~8 extra
+    small stages cost more than a tiny cache (measured: sf0.1 3.0 vs
+    4.8 s, sf1 5.3 vs 7.3 s, crossover between sf1 and sf10).  Values
+    are identical either way (est_jaccard is a pure function of the
+    two signatures; the post-expansion groupBy dedupes the
+    per-collision copies).  Registry callers gate it on the same
+    corpus-byte sizing as ``agg_partitions`` elsewhere -- the
     ``distinct_parts_per_flag`` None-means-stock pattern.
 
     A caller-built shared shingle frame (one shingling for this and
     ``ngram_jaccard_pairs``) was measured at sf10 and rejected:
     SCALING.md "Shared shingle stream A/B".
 
-    ``broadcast_max_ids`` (r12, slim path only): envelope for the
-    MEASURED broadcast of the candidate-id spine into the signature
-    semi-filter -- candidate-PAIR count (a free count over the
-    checkpointed pair blocks) times two must fit under it.  Default
-    4M ids (~32 MB hashed-relation).  See the inline note for why AQE
-    cannot make this call on its own.
+    ``_BROADCAST_MAX_IDS`` (r12, slim path only) is the envelope for
+    the MEASURED broadcast of the candidate-id spine into the
+    signature semi-filter.  See the inline note for why AQE cannot
+    make this call on its own.
     """
     if not slim_postings:
         return _minhash_banded_pairs_small(
             df, id_col, text_col, num_hashes, num_bands, shingle_n,
             min_jaccard, max_bucket_size,
         )
-    base, signed, banded = _banded_postings(
+    _, signed, banded = _banded_postings(
         df, id_col, text_col, num_hashes, num_bands, shingle_n
     )
 
@@ -735,7 +735,7 @@ def minhash_banded_pairs(
     # map-side with ZERO added shuffle, and degrades to a shuffled semi
     # join (one corpus-sig exchange instead of two) on a degenerate
     # corpus where the candidate set is itself corpus-scale.
-    # MEASURED broadcast decision (the broadcast_max_fps contract from
+    # MEASURED broadcast decision (the _BROADCAST_MAX_FPS contract from
     # streaming dedup): AQE cannot save the signed exchange here -- it
     # materializes BOTH semi-join child exchanges before it learns the
     # spine is ~1 MB, so the corpus-sized signature exchange is already
@@ -757,7 +757,7 @@ def minhash_banded_pairs(
     # ~150k ids) -- a proxy would refuse an easily broadcastable spine.
     # The count's job is candidate-scale (reads the pair checkpoint
     # blocks) and doubles as the cache fill the broadcast build reads.
-    if pair_ids.count() <= broadcast_max_ids:
+    if pair_ids.count() <= _BROADCAST_MAX_IDS:
         pair_ids = F.broadcast(pair_ids)
     sig_cand = signed.join(pair_ids, "id", "leftsemi")
     sig_a = sig_cand.select(F.col("id").alias("id_a"), F.col("sig").alias("__sig_a"))
@@ -789,40 +789,34 @@ def minhash_banded_pairs(
         # est prefilter
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if prune_verify:
-        # exact verification touches only CANDIDATE docs:
-        # semi-join-prune the corpus to the candidate id spine and
-        # shingle just those (candidate-sized, not corpus-sized -- the
-        # r9 change that removed the corpus-wide shingle-set cache).
-        # The spine is `pair_ids` -- the PRE-est-filter candidate ids,
-        # a harmless superset of the post-filter ids (extra sh rows
-        # never join back: the final joins are inner on cand) -- because
-        # it is already materialized AND carries the measured broadcast
-        # decision.  Deriving the exact post-filter spine here would
-        # re-run a distinct AND hand AQE another corpus-side semi whose
-        # text exchange it materializes before it can broadcast
-        # (measured at sf30: a 347.6 MB corpus text exchange against a
-        # 1 MB spine).
-        ids = pair_ids
-        # EAGER checkpoint for the same reason as `pairs`: the two
-        # verify legs (sh_a / sh_b) are independent branches, and a
-        # lazy persist let both re-run the corpus semi-prune +
-        # re-shingle (sf30 ledger: two ~122 MB shingle exchanges
-        # from two full corpus scans).  The checkpoint job also
-        # materializes `cand`'s cache en route, so the final probe
-        # never races it either.
-        sh = (
-            df.join(ids, F.col(id_col) == ids["id"], "leftsemi")
-            .select(
-                F.col(id_col).alias("id"),
-                word_shingles(text_col, shingle_n).alias("__sh"),
-            )
-            .localCheckpoint(eager=True)
+    # exact verification touches only CANDIDATE docs:
+    # semi-join-prune the corpus to the candidate id spine and
+    # shingle just those (candidate-sized, not corpus-sized -- the
+    # r9 change that removed the corpus-wide shingle-set cache).
+    # The spine is `pair_ids` -- the PRE-est-filter candidate ids,
+    # a harmless superset of the post-filter ids (extra sh rows
+    # never join back: the final joins are inner on cand) -- because
+    # it is already materialized AND carries the measured broadcast
+    # decision.  Deriving the exact post-filter spine here would
+    # re-run a distinct AND hand AQE another corpus-side semi whose
+    # text exchange it materializes before it can broadcast
+    # (measured at sf30: a 347.6 MB corpus text exchange against a
+    # 1 MB spine).
+    # EAGER checkpoint for the same reason as `pairs`: the two
+    # verify legs (sh_a / sh_b) are independent branches, and a
+    # lazy persist let both re-run the corpus semi-prune +
+    # re-shingle (sf30 ledger: two ~122 MB shingle exchanges
+    # from two full corpus scans).  The checkpoint job also
+    # materializes `cand`'s cache en route, so the final probe
+    # never races it either.
+    sh = (
+        df.join(pair_ids, F.col(id_col) == pair_ids["id"], "leftsemi")
+        .select(
+            F.col(id_col).alias("id"),
+            word_shingles(text_col, shingle_n).alias("__sh"),
         )
-    else:
-        # small corpus: a corpus-wide shingle cache is trivial and the
-        # prune chain's extra stages would dominate (docstring numbers)
-        sh = base.persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
+    )
     sh_a = sh.select(F.col("id").alias("id_a"), F.col("__sh").alias("__sh_a"))
     sh_b = sh.select(F.col("id").alias("id_b"), F.col("__sh").alias("__sh_b"))
     inter = F.size(F.array_intersect("__sh_a", "__sh_b"))

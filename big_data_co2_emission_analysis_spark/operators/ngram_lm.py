@@ -17,8 +17,8 @@ Spark-first shape (no Python boundary anywhere):
 - Scoring is ONE shuffle: the exploded bigram stream joins the count
   table on (v, w).  The 1-row vocabulary scalar broadcasts; the
   context-total table (|vocab| rows -- web-corpus vocabularies do NOT
-  broadcast safely) joins under an AQE runtime size gate, see
-  ``score_docs_bigram_lm(ctx_join=...)``.
+  broadcast safely) joins under a measured size gate, see
+  ``_BROADCAST_MAX_BIGRAMS`` / ``_BROADCAST_MAX_BYTES``.
 
 Model: add-alpha smoothed bigram LM over the corpus's own vocabulary,
 
@@ -58,6 +58,15 @@ BOS = "<s>"
 
 #: log-prob quantization scale (decimal places) for the associative sum
 LP_SCALE = 9
+
+#: broadcast envelope of the count/context join, checked against the
+#: MEASURED count table (one row per distinct bigram): at most 1M rows
+#: AND at most 64 MiB of estimated in-memory size (measured key octets
+#: + ~48 B/row of UTF8String/long/hash-entry overhead).  A forced
+#: broadcast replicates to every executor plus the driver, so a
+#: row-only gate would let 1M long-token bigrams ship hundreds of MB.
+_BROADCAST_MAX_BIGRAMS = 1_000_000
+_BROADCAST_MAX_BYTES = 64 << 20
 
 
 def _token_array(text_col: Column) -> Column:
@@ -116,10 +125,6 @@ def score_docs_bigram_lm(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 0.5,
-    ctx_join: str = "auto",
-    stream_partitions: int | None = None,
-    broadcast_max_bigrams: int = 1_000_000,
-    broadcast_max_bytes: int = 64 << 20,
 ) -> DataFrame:
     """Per-document LM score: (id, n_bigrams, avg_logprob, perplexity).
 
@@ -145,59 +150,23 @@ def score_docs_bigram_lm(
     measured broadcast gate below.  (The cache outlives the call --
     the returned frame is lazy; ``session.release_pinned`` frees it.)
 
-    ``ctx_join`` gates how the count/context tables (one row per
-    distinct bigram/token -- vocabulary-sized, so fine at fixture
-    scale but 10^8+ rows on a web corpus, which would OOM a forced
-    broadcast) join the bigram stream:
-
-    - ``'auto'`` (default): broadcast-confirm from MEASURED cardinality
-      AND measured bytes (the streaming-dedup envelope pattern): if the
-      materialized count table holds at most ``broadcast_max_bigrams``
-      rows AND its estimated in-memory size (measured key octets +
-      ~48 B/row of UTF8String/long/hash-entry overhead, summed in the
-      same job that forces the cache) is at most ``broadcast_max_bytes``
-      (default 64 MiB -- a forced broadcast replicates to every executor
-      plus the driver, so a row-only gate would let 1M long-token
-      bigrams ship hundreds of MB), both it and the (strictly smaller)
-      context table broadcast -- the 27M-row
-      scoring stream then never shuffles at all (measured at sf10: the
-      stream otherwise pays a ~650 MiB exchange, because AQE sizes the
-      broadcast decision by the PRE-aggregation exchange bytes
-      (~97 MiB > threshold), not the 96k-row post-agg table, and
-      refuses).  Above the envelope it degrades to the web-corpus-safe
-      'shuffle' shape for that run -- exact same fallback contract as
-      streaming/windows.py ``broadcast_max_fps``.
-    - ``'broadcast'``: force the hint (vocabulary known small).
-    - ``'shuffle'``: forbid broadcast (shuffle-hash hint) -- the web-
-      corpus path; also what 'auto' degrades to above the envelope.
-
-    All three are value-identical (oracle-pinned); only the physical
-    join strategy differs.
-
-    ``stream_partitions`` (r8, value-identical, opt-in at scale): by
-    default the bigram stream is EXTRACTED TWICE -- once pruned to
-    (v, w) for training, once with the id for scoring -- because the
-    two subtrees canonicalize differently and nothing is shared.  When
-    set, one (id, v, w) stream is explicitly repartitioned by (v, w)
-    and BOTH consumers read that single exchange (training keeps the
-    id referenced via ``plans.pinning.pinned_count``, so pruning
-    cannot re-split the subtrees): one corpus scan + tokenize +
-    explode instead of two, and the training shuffle rides the
-    exchange the scoring join needs anyway.  The trade is the training
-    aggregate's map-side combine (worthless on mostly-distinct web
-    bigrams) and a forced exchange where AQE would have broadcast the
-    count table.  Measured A/B at fixtures/sf10 (500k docs, 25M
-    bigrams, Heaps-bounded synthetic vocabulary): stock 15.5 s warm vs
-    shared 18-19 s -- on THIS corpus the vocabulary is small enough
-    that AQE broadcasts the counts and never shuffles the stream, so
-    the registry queries run stock.  The shared mode's envelope is the
-    open-vocabulary web corpus, where the bigram-count table is far
-    past broadcast capacity and the scoring join must shuffle the
-    stream anyway -- there it removes one of two corpus
-    scans+tokenizations and the training exchange outright.  Size like
-    the substring family's ``agg_partitions`` (~one partition per
-    512 KiB of compressed text); value parity + single-scan stage
-    reuse pinned in tests/test_ngram_lm.py.
+    How the count/context tables (one row per distinct bigram/token --
+    vocabulary-sized, so fine at fixture scale but 10^8+ rows on a web
+    corpus, which would OOM a forced broadcast) join the bigram stream
+    is a broadcast-confirm from MEASURED cardinality AND measured bytes
+    (the streaming-dedup envelope pattern): if the materialized count
+    table is within ``_BROADCAST_MAX_BIGRAMS`` rows and
+    ``_BROADCAST_MAX_BYTES`` of estimated size (summed in the same job
+    that forces the cache), both it and the (strictly smaller) context
+    table broadcast -- the 27M-row scoring stream then never shuffles
+    at all (measured at sf10: the stream otherwise pays a ~650 MiB
+    exchange, because AQE sizes the broadcast decision by the
+    PRE-aggregation exchange bytes (~97 MiB > threshold), not the
+    96k-row post-agg table, and refuses).  Above the envelope both
+    tables take a shuffle-hash hint -- the web-corpus-safe shape, the
+    same fallback contract as streaming/windows.py
+    ``_BROADCAST_MAX_FPS``.  The two shapes are value-identical
+    (oracle-pinned); only the physical join strategy differs.
 
     Cross-engine note (accepted knife edge): the per-bigram smoothed
     probability is a plain IEEE division -- bit-identical in Spark and
@@ -210,77 +179,40 @@ def score_docs_bigram_lm(
     fixture corpus is pinned green, and a flip needs a log output
     within ~1e-16 of a half-quantum -- ~1e-7 odds per distinct bigram.
     """
-    if ctx_join not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"ctx_join must be auto|broadcast|shuffle, got {ctx_join!r}")
-    if stream_partitions is not None:
-        from ..plans.pinning import pinned_count, pinned_filter
-
-        big = doc_bigrams(docs, id_col, text_col).repartition(
-            stream_partitions, "v", "w"
-        )
-        counts = big.groupBy("v", "w").agg(
-            pinned_count([id_col]).alias("c_vw")
-        )
-        ctx = counts.groupBy("v").agg(F.sum("c_vw").alias("c_v"))
-        # the vocab branch uses only `w`: without the pin, pruning
-        # drops c_vw (and with it the pinned id) from ITS copy of the
-        # counts aggregate, the subtrees stop canonicalizing equal,
-        # and the corpus is scanned a second time just for this
-        # one-row scalar
-        vocab = counts.filter(pinned_filter(["c_vw"])).agg(
-            F.count_distinct("w").alias("v_size")
-        )
+    big = doc_bigrams(docs, id_col, text_col)
+    # materialize the vocabulary-bounded count table ONCE (see the
+    # docstring): without the cache its three consumers prune the
+    # aggregate differently and the corpus-sized explode+agg runs
+    # three times; the forced count doubles as the broadcast gate.
+    counts = big.groupBy("v", "w").agg(F.count(F.lit(1)).alias("c_vw")).persist()
+    # one job forces the cache AND measures the envelope: row count
+    # plus actual key octets (the byte gate -- row count alone says
+    # nothing about 1M bigrams of long tokens)
+    n_distinct_bigrams, key_octets = counts.agg(
+        F.count(F.lit(1)), F.sum(F.octet_length("v") + F.octet_length("w"))
+    ).head()
+    est_bytes = (key_octets or 0) + 48 * n_distinct_bigrams
+    ctx = counts.groupBy("v").agg(F.sum("c_vw").alias("c_v"))
+    vocab = counts.agg(F.count_distinct("w").alias("v_size"))
+    if (
+        n_distinct_bigrams <= _BROADCAST_MAX_BIGRAMS
+        and est_bytes <= _BROADCAST_MAX_BYTES
+    ):
+        counts = F.broadcast(counts)
+        ctx = F.broadcast(ctx)
     else:
-        big = doc_bigrams(docs, id_col, text_col)
-        # materialize the vocabulary-bounded count table ONCE (see the
-        # docstring): without the cache its three consumers prune the
-        # aggregate differently and the corpus-sized explode+agg runs
-        # three times; the forced count doubles as the broadcast gate.
-        counts = big.groupBy("v", "w").agg(F.count(F.lit(1)).alias("c_vw")).persist()
-        # one job forces the cache AND measures the envelope: row count
-        # plus actual key octets (the byte gate -- row count alone says
-        # nothing about 1M bigrams of long tokens)
-        _n, _key_octets = counts.agg(
-            F.count(F.lit(1)), F.sum(F.octet_length("v") + F.octet_length("w"))
-        ).head()
-        n_distinct_bigrams = _n
-        est_bytes = (_key_octets or 0) + 48 * n_distinct_bigrams
-        ctx = counts.groupBy("v").agg(F.sum("c_vw").alias("c_v"))
-        vocab = counts.agg(F.count_distinct("w").alias("v_size"))
-        if ctx_join == "auto":
-            # broadcast-confirm from the measured cardinality AND bytes;
-            # above either envelope fall back to the web-corpus shuffle
-            # shape (a forced broadcast bypasses
-            # autoBroadcastJoinThreshold, so IT must carry the safety)
-            ctx_join = (
-                "broadcast"
-                if n_distinct_bigrams <= broadcast_max_bigrams
-                and est_bytes <= broadcast_max_bytes
-                else "shuffle"
-            )
+        # above the envelope (a forced broadcast bypasses
+        # autoBroadcastJoinThreshold, so the gate carries the safety):
+        # shuffle_hash on the (bounded) build sides -- the stream side
+        # must exchange at this scale, but it never needs SORTING for
+        # a 1:1 probe (the substring-family SHJ rationale)
+        counts = counts.hint("shuffle_hash")
+        ctx = ctx.hint("shuffle_hash")
 
     lp = F.log(
         (F.coalesce(F.col("c_vw"), F.lit(0)).cast("double") + F.lit(alpha))
         / (F.col("c_v").cast("double") + F.lit(alpha) * F.col("v_size").cast("double"))
     )
-    if ctx_join == "auto":
-        # shared-stream mode keeps the r8 contract: the forced stream
-        # exchange is the plan, AQE sizes the ctx join at runtime (and
-        # with AQE off degrade to the safe shuffle strategy)
-        aqe = str(
-            docs.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
-        ).lower()
-        if aqe != "true":
-            ctx_join = "shuffle"
-    if ctx_join == "broadcast":
-        counts = F.broadcast(counts)
-        ctx = F.broadcast(ctx)
-    elif ctx_join == "shuffle":
-        # shuffle_hash on the (bounded) build sides: the stream side
-        # must exchange at this scale, but it never needs SORTING for
-        # a 1:1 probe (the substring-family SHJ rationale)
-        counts = counts.hint("shuffle_hash")
-        ctx = ctx.hint("shuffle_hash")
     scored = (
         big.join(counts, ["v", "w"], "left")
         .join(ctx, "v")

@@ -18,6 +18,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+#: late-key broadcast envelope of ``scd2_apply``: the MEASURED count of
+#: the checkpointed late-key spine (keys-only rows) at or below 2M
+#: broadcasts; above it the plan falls back to the shuffle shape.
+_BROADCAST_MAX_KEYS = 2_000_000
+
 
 def scd2_build(
     changes: DataFrame,
@@ -47,7 +52,6 @@ def scd2_apply(
     key_cols: list[str],
     ts_col: str,
     order_cols: list[str] | None = None,
-    broadcast_max_keys: int = 2_000_000,
 ) -> DataFrame:
     """Apply a CDC update batch to an existing SCD2 dimension.
 
@@ -74,7 +78,7 @@ def scd2_apply(
     localCheckpointed (computed once; keys-only rows), its MEASURED
     count -- a cheap block read off the checkpoint -- gates an explicit
     broadcast (the minhash candidate-spine discipline: never broadcast
-    on estimates), and above ``broadcast_max_keys`` the plan falls back
+    on estimates), and above ``_BROADCAST_MAX_KEYS`` the plan falls back
     to exactly the previous shuffle shape.  Values are unchanged on
     both sides of the gate (a checkpoint is a materialization; a
     broadcast is a join strategy).  The checkpoint pins one block per
@@ -93,7 +97,7 @@ def scd2_apply(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    if late_keys.count() <= broadcast_max_keys:
+    if late_keys.count() <= _BROADCAST_MAX_KEYS:
         late_keys = F.broadcast(late_keys)
 
     # fast path: untouched closed rows + re-chain of (open + updates)

@@ -262,15 +262,14 @@ def minhash_banded_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .text_queries import _jaccard_agg_partitions
 
     docs = read_documents(spark, sf_dir)
-    # ONE byte gate drives both scale knobs (the r10 crossover fix):
-    # below it the corpus keeps the r8 sig-on-posting shape and the
-    # corpus-wide shingle cache (tiny exchanges, fewest stages); above
-    # it slim postings + candidate-pruned verification win (same byte
-    # sizing as the substring/Jaccard families; operator docstring A/B)
+    # ONE byte gate picks the shape (the r10 crossover fix): below it
+    # the corpus keeps the r8 sig-on-posting shape and the corpus-wide
+    # shingle cache (tiny exchanges, fewest stages); above it slim
+    # postings + candidate-pruned verification win (same byte sizing
+    # as the substring/Jaccard families; operator docstring A/B)
     big = _jaccard_agg_partitions(spark, sf_dir, divisor_kib=512) is not None
     return minhash_banded_pairs(
-        docs, "doc_id", "text", min_jaccard=0.3,
-        prune_verify=big, slim_postings=big,
+        docs, "doc_id", "text", min_jaccard=0.3, slim_postings=big
     )
 
 

@@ -428,9 +428,10 @@ def streaming_interval_join_outer_rocksdb(spark: SparkSession, sf_dir: str) -> D
     provider (spark.sql.streaming.stateStore.providerClass +
     changelog checkpointing), run to completion; must be value-identical
     to ``streaming_interval_join_outer``."""
-    from ..streaming.windows import rocksdb_state
+    from ..session import conf_scope
+    from ..streaming.windows import ROCKSDB_STATE_CONFS
 
-    with rocksdb_state(spark):
+    with conf_scope(spark, ROCKSDB_STATE_CONFS):
         return streaming_interval_join_outer(spark, sf_dir)
 
 
@@ -594,19 +595,18 @@ def _stage_document_shards(
     return staged, docs.schema
 
 
-@register(
-    "streaming_incremental_dedup",
-    # First arrival wins ACROSS batches (a fingerprint already in the
-    # manifest is dup_of_base), min doc_id wins WITHIN a batch -- with
-    # the deterministic doc_id % 3 sharding and ordered batches, the
-    # survivor per fingerprint is exactly ROW_NUMBER() OVER
-    # (PARTITION BY fingerprint ORDER BY shard, doc_id) = 1.  The
-    # fingerprint replicates operators.dedup.fingerprint:
-    # md5 over whitespace-collapsed lower(trim(text)); the aug CTE
-    # replicates _augmented_docs' planted duplicates (the raw fixture's
-    # fingerprints are all unique -- without planting, nothing would
-    # ever be rejected and the check would be vacuous).
-    oracle=r"""
+#: the one oracle of the three streaming_incremental_dedup* rows (their
+#: batch bodies differ, the answer cannot).  First arrival wins ACROSS
+#: batches (a fingerprint already in the manifest is dup_of_base), min
+#: doc_id wins WITHIN a batch -- with the deterministic doc_id % 3
+#: sharding and ordered batches, the survivor per fingerprint is exactly
+#: ROW_NUMBER() OVER (PARTITION BY fingerprint ORDER BY shard, doc_id)
+#: = 1.  The fingerprint replicates operators.dedup.fingerprint: md5
+#: over whitespace-collapsed lower(trim(text)); the aug CTE replicates
+#: _augmented_docs' planted duplicates (the raw fixture's fingerprints
+#: are all unique -- without planting, nothing would ever be rejected
+#: and the check would be vacuous).
+_INC_DEDUP_ORACLE = r"""
     WITH aug AS (
       SELECT doc_id, text FROM documents
       UNION ALL
@@ -627,7 +627,12 @@ def _stage_document_shards(
       FROM d
     )
     SELECT doc_id, fingerprint FROM ranked WHERE rn = 1 ORDER BY doc_id
-    """,
+    """
+
+
+@register(
+    "streaming_incremental_dedup",
+    oracle=_INC_DEDUP_ORACLE,
     tags=("streaming", "dedup", "text"),
 )
 def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -650,6 +655,7 @@ def _run_incremental_dedup(
     import os
     import tempfile
 
+    from ..session import conf_scope
     from ..sources.readers import table_nbytes
     from ..streaming.windows import _stream_confs, stream_incremental_dedup
 
@@ -678,7 +684,7 @@ def _run_incremental_dedup(
         table_nbytes(os.path.join(sf_dir, "documents.parquet")),
         per_partition_bytes=4 << 20,
     )
-    with _stream_confs(spark, state_partitions=parts):
+    with conf_scope(spark, _stream_confs(state_partitions=parts)):
         q = stream_incremental_dedup(
             stream, manifest, out, ckpt, bloom_bits=bloom_bits, confirm=confirm
         )
@@ -701,28 +707,7 @@ def _run_incremental_dedup(
     # confirm.  Hash-matching the SAME oracle as the exact variant
     # proves the filter only skips work, never changes answers (no
     # false negatives by construction).
-    oracle=r"""
-    WITH aug AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT doc_id + 300000, text FROM documents WHERE doc_id % 7 = 0
-    ),
-    d AS (
-      SELECT doc_id,
-             MD5(REGEXP_REPLACE(LOWER(TRIM(text)), '\s+', ' ', 'g')) AS fingerprint,
-             doc_id % 3 AS shard
-      FROM aug
-    ),
-    ranked AS (
-      SELECT doc_id, fingerprint,
-             ROW_NUMBER() OVER (PARTITION BY fingerprint
-                                ORDER BY shard, doc_id) AS rn
-      FROM d
-    )
-    SELECT doc_id, fingerprint FROM ranked WHERE rn = 1 ORDER BY doc_id
-    """,
+    oracle=_INC_DEDUP_ORACLE,
     tags=("streaming", "dedup", "text", "bloom"),
 )
 def streaming_incremental_dedup_bloom(
@@ -747,28 +732,7 @@ def streaming_incremental_dedup_bloom(
     # streaming/windows.py _broadcast_confirm_dedup and the measured
     # three-way comparison in SCALING_CURVE.md).  Same oracle as the
     # exact variant: the plan shape changes, the answer cannot.
-    oracle=r"""
-    WITH aug AS (
-      SELECT doc_id, text FROM documents
-      UNION ALL
-      SELECT doc_id + 100000, text FROM documents WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT doc_id + 300000, text FROM documents WHERE doc_id % 7 = 0
-    ),
-    d AS (
-      SELECT doc_id,
-             MD5(REGEXP_REPLACE(LOWER(TRIM(text)), '\s+', ' ', 'g')) AS fingerprint,
-             doc_id % 3 AS shard
-      FROM aug
-    ),
-    ranked AS (
-      SELECT doc_id, fingerprint,
-             ROW_NUMBER() OVER (PARTITION BY fingerprint
-                                ORDER BY shard, doc_id) AS rn
-      FROM d
-    )
-    SELECT doc_id, fingerprint FROM ranked WHERE rn = 1 ORDER BY doc_id
-    """,
+    oracle=_INC_DEDUP_ORACLE,
     tags=("streaming", "dedup", "text"),
 )
 def streaming_incremental_dedup_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -868,6 +832,7 @@ def streaming_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import os
 
+    from ..session import conf_scope
     from ..sources.readers import table_nbytes
     from ..streaming.windows import _stream_confs, streaming_shuffle_partitions
 
@@ -876,7 +841,7 @@ def streaming_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         table_nbytes(os.path.join(sf_dir, "documents.parquet")),
         per_partition_bytes=4 << 20,
     )
-    with _stream_confs(spark, state_partitions=parts):
+    with conf_scope(spark, _stream_confs(state_partitions=parts)):
         q = stream_quality_psi(stream, state, out, ckpt)
         q.awaitTermination()
     return (

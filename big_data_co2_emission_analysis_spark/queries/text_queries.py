@@ -2451,216 +2451,20 @@ def substring_removed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Flagship curation pipeline v2: FOUR stages composed -- token-count
-# quality gate -> bigram-LM perplexity filter (<= 31.0; a production
-# pipeline would derive the cut from a quantile, the fixed constant
-# keeps the oracle exact) -> fingerprint dedup -> concat-and-split
-# packing.  The oracle replays all four stages sequentially in SQL, so
-# one hash match certifies the whole curated manifest including the LM
-# training + scoring embedded in the middle.
-# --------------------------------------------------------------------------
-_CURATE_MAX_PPL = 31.0
-
-
-@register(
-    "curated_corpus_v2",
-    oracle=f"""
-    WITH
-    {_LM_BIGRAM_CTES},
-    {_LM_SCORED_CTES},
-    ppl AS (
-      SELECT doc_id,
-             ROUND(EXP(-(CAST(SUM(lp_fx) AS DOUBLE) / 1e9 / COUNT(*))), 6) AS perplexity
-      FROM lm_scored GROUP BY doc_id
-    ),
-    stats AS (
-      SELECT doc_id, text,
-             CAST(LEN(STRING_SPLIT_REGEX(TRIM(text), '\\s+')) AS BIGINT) AS n,
-             MD5(REGEXP_REPLACE(LOWER(TRIM(text)), '\\s+', ' ', 'g')) AS fp
-      FROM documents
-    ),
-    quality AS (
-      SELECT s.* FROM stats s JOIN ppl p USING (doc_id)
-      WHERE s.n >= 20 AND s.n <= 2000 AND p.perplexity <= {_CURATE_MAX_PPL}
-    ),
-    dedup AS (
-      SELECT doc_id, n FROM (
-        SELECT doc_id, n,
-               ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-        FROM quality
-      ) WHERE rn = 1
-    ),
-    c AS (
-      SELECT doc_id, n,
-             CAST(SUM(n) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) - n AS BIGINT) AS s
-      FROM dedup WHERE n > 0
-    ),
-    e AS (SELECT doc_id, n, s, s + n AS fin FROM c),
-    x AS (
-      SELECT doc_id, s, fin,
-             UNNEST(generate_series(s // 512, (fin - 1) // 512)) AS seq_id
-      FROM e
-    )
-    SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
-           GREATEST(seq_id * 512 - s, 0) AS doc_offset,
-           LEAST(fin, (seq_id + 1) * 512) - GREATEST(s, seq_id * 512)
-             AS tokens_in_seq,
-           GREATEST(s - seq_id * 512, 0) AS seq_offset
-    FROM x ORDER BY seq_id, doc_id
-    """,
-    tags=("packing", "dedup", "text", "lm", "pipeline"),
-)
-def curated_corpus_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """curated_corpus_manifest + a bigram-LM perplexity gate between
-    the quality filter and dedup: the four-stage curation shape of a
-    real pretraining pipeline, certified end-to-end by one oracle."""
-    from ..operators.dedup import fingerprint_dedup
-    from ..operators.ngram_lm import score_docs_bigram_lm
-    from ..operators.packing import concat_split_pack
-
-    docs = _docs(spark, sf_dir)
-    ppl = score_docs_bigram_lm(docs, alpha=_LM_ALPHA).select("doc_id", "perplexity")
-    stats = docs.select(
-        "doc_id",
-        "text",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
-    )
-    quality = (
-        stats.join(ppl, "doc_id")
-        .filter(
-            (F.col("n_tokens") >= 20)
-            & (F.col("n_tokens") <= 2000)
-            & (F.col("perplexity") <= _CURATE_MAX_PPL)
-        )
-    )
-    deduped = fingerprint_dedup(quality, "text", "doc_id").select("doc_id", "n_tokens")
-    return concat_split_pack(deduped, "doc_id", "n_tokens", budget=512).orderBy(
-        "seq_id", "doc_id"
-    )
-
-
-# --------------------------------------------------------------------------
-# Flagship curation pipeline v3: v2 with the perplexity cut DERIVED
-# from the corpus (exact distributed P75 via operators/quantiles
-# .exact_quantiles, which matches quantile_cont bit-for-bit) instead of
-# a fixed constant -- the production shape v2's comment promised.  The
-# threshold rides into the plan as a broadcast 1-row join, never a
-# magic number; the oracle replays it as a scalar subquery.
+# Flagship curation pipeline v4: SIX stages composed -- token-count
+# quality gate -> corpus-derived P75 perplexity gate (exact distributed
+# quantile via operators/quantiles.exact_quantiles, which matches
+# quantile_cont bit-for-bit; the threshold rides into the plan as a
+# broadcast 1-row join, the oracle replays it as a scalar subquery) ->
+# fingerprint dedup -> SUBSTRING DEDUP REWRITE (keep-first removal of
+# repeated k-token windows; the manifest carries each survivor's
+# post-cut token count) -> TEMPERATURE-SCALED MIXTURE (T=2, 25% token
+# budget over the rewritten corpus) -> concat-and-split packing.  One
+# oracle replays all six stages in SQL, so a single hash match
+# certifies the complete pretraining data recipe: quality, perplexity,
+# exact dedup, substring dedup, domain mix, and packing.
 # --------------------------------------------------------------------------
 _CURATE_PPL_Q = 0.75
-
-
-@register(
-    "curated_corpus_v3",
-    oracle=f"""
-    WITH
-    {_LM_BIGRAM_CTES},
-    {_LM_SCORED_CTES},
-    ppl AS (
-      SELECT doc_id,
-             ROUND(EXP(-(CAST(SUM(lp_fx) AS DOUBLE) / 1e9 / COUNT(*))), 6) AS perplexity
-      FROM lm_scored GROUP BY doc_id
-    ),
-    stats AS (
-      SELECT doc_id, text,
-             CAST(LEN(STRING_SPLIT_REGEX(TRIM(text), '\\s+')) AS BIGINT) AS n,
-             MD5(REGEXP_REPLACE(LOWER(TRIM(text)), '\\s+', ' ', 'g')) AS fp
-      FROM documents
-    ),
-    quality AS (
-      SELECT s.* FROM stats s JOIN ppl p USING (doc_id)
-      WHERE s.n >= 20 AND s.n <= 2000
-        AND p.perplexity <= (SELECT quantile_cont(perplexity, {_CURATE_PPL_Q})
-                             FROM ppl)
-    ),
-    dedup AS (
-      SELECT doc_id, n FROM (
-        SELECT doc_id, n,
-               ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-        FROM quality
-      ) WHERE rn = 1
-    ),
-    c AS (
-      SELECT doc_id, n,
-             CAST(SUM(n) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) - n AS BIGINT) AS s
-      FROM dedup WHERE n > 0
-    ),
-    e AS (SELECT doc_id, n, s, s + n AS fin FROM c),
-    x AS (
-      SELECT doc_id, s, fin,
-             UNNEST(generate_series(s // 512, (fin - 1) // 512)) AS seq_id
-      FROM e
-    )
-    SELECT CAST(seq_id AS BIGINT) AS seq_id, doc_id,
-           GREATEST(seq_id * 512 - s, 0) AS doc_offset,
-           LEAST(fin, (seq_id + 1) * 512) - GREATEST(s, seq_id * 512)
-             AS tokens_in_seq,
-           GREATEST(s - seq_id * 512, 0) AS seq_offset
-    FROM x ORDER BY seq_id, doc_id
-    """,
-    tags=("packing", "dedup", "text", "lm", "pipeline", "quantile"),
-)
-def curated_corpus_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """curated_corpus_v2 with the perplexity threshold derived from the
-    corpus itself: keep documents at or under the exact P75 perplexity
-    (distributed exact quantile, bit-matching quantile_cont), then
-    dedup and pack -- no fixed constants anywhere in the gate."""
-    from ..operators.dedup import fingerprint_dedup
-    from ..operators.ngram_lm import score_docs_bigram_lm
-    from ..operators.packing import concat_split_pack
-    from ..operators.quantiles import exact_quantiles
-
-    docs = _docs(spark, sf_dir)
-    # the ppl frame feeds BOTH the quantile (evaluated eagerly inside
-    # exact_quantiles) and the gate join below -- localCheckpoint it
-    # once so the bigram-LM train+score (the pipeline's dominant cost)
-    # does not run twice (measured at sf10: 89 -> ~55 s); N rows x 16 B,
-    # linear and small next to the corpus
-    ppl = (
-        score_docs_bigram_lm(docs, alpha=_LM_ALPHA)
-        .select("doc_id", "perplexity")
-        .localCheckpoint(eager=True)
-    )
-    cut = exact_quantiles(
-        ppl.select(F.lit(1).alias("k"), "perplexity"),
-        "k",
-        "perplexity",
-        [_CURATE_PPL_Q],
-    ).select(F.col("value").alias("max_ppl"))
-    stats = docs.select(
-        "doc_id",
-        "text",
-        F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("long").alias("n_tokens"),
-    )
-    quality = (
-        stats.join(ppl, "doc_id")
-        .join(F.broadcast(cut))
-        .filter(
-            (F.col("n_tokens") >= 20)
-            & (F.col("n_tokens") <= 2000)
-            & (F.col("perplexity") <= F.col("max_ppl"))
-        )
-    )
-    deduped = fingerprint_dedup(quality, "text", "doc_id").select("doc_id", "n_tokens")
-    return concat_split_pack(deduped, "doc_id", "n_tokens", budget=512).orderBy(
-        "seq_id", "doc_id"
-    )
-
-
-# --------------------------------------------------------------------------
-# Flagship curation pipeline v4: v3 plus the two r7 stages -- SIX
-# stages composed: token-count quality gate -> corpus-derived P75
-# perplexity gate -> fingerprint dedup -> SUBSTRING DEDUP REWRITE
-# (keep-first removal of repeated k-token windows; the manifest
-# carries each survivor's post-cut token count) -> TEMPERATURE-SCALED
-# MIXTURE (T=2, 25% token budget over the rewritten corpus) ->
-# concat-and-split packing.  One oracle replays all six stages in SQL,
-# so a single hash match certifies the complete pretraining data
-# recipe: quality, perplexity, exact dedup, substring dedup, domain
-# mix, and packing.
-# --------------------------------------------------------------------------
 _CURATE_V4_MIX_FRAC = 0.25
 _CURATE_V4_T = 2.0
 
@@ -2811,7 +2615,8 @@ def curated_corpus_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     # ppl feeds the quantile AND the gate join; checkpoint so the
-    # bigram-LM train+score runs once (the v3 lesson, measured at sf10).
+    # bigram-LM train+score (the pipeline's dominant cost) runs once
+    # (measured at sf10: 89 -> ~55 s).
     # n_bigrams rides along as the token-count gate: with the BOS
     # prefix every token is some bigram's successor, so n_bigrams ==
     # the whitespace token count exactly for every document that can

@@ -81,6 +81,36 @@ def release_pinned(spark: SparkSession) -> int:
 
 
 @_contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Set session confs for the duration of a block, restoring each
+    prior value on exit -- a key that was unset before is unset again
+    -- also when the body raises.  A set that fails partway through
+    entry (e.g. a static conf) rolls back the keys already applied
+    before re-raising, so a failed entry never leaves the session
+    half-configured.
+
+    These are SESSION-GLOBAL runtime confs: two concurrent scopes over
+    one key race on restore.  The scope takes no lock; a caller that
+    must serialize holds its own around it (``arrow_transfer``).  A
+    stream run must NOT hold one: its foreachBatch body runs on the
+    py4j callback thread (and may enter ``arrow_transfer``) while the
+    driver thread waits in ``awaitTermination()`` inside the scope."""
+    saved: dict[str, str | None] = {}
+    try:
+        for k, v in confs.items():
+            old = spark.conf.get(k, None)
+            spark.conf.set(k, v)
+            saved[k] = old
+        yield
+    finally:
+        for k, old in reversed(saved.items()):
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+
+@_contextmanager
 def arrow_transfer(spark: SparkSession):
     """Force Arrow for a pandas-boundary transfer regardless of the
     caller's session config, restoring the prior setting on exit.
@@ -105,20 +135,7 @@ def arrow_transfer(spark: SparkSession):
     the engine's own callers all route through here, and the
     single-driver-thread bench/driver protocol is the documented
     operating mode."""
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    with _ARROW_CONF_LOCK:
-        try:
-            old = spark.conf.get(key, None)
-        except Exception:
-            old = None
-        spark.conf.set(key, "true")
-        try:
-            yield
-        finally:
-            try:
-                if old is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, old)
-            except Exception:
-                pass
+    with _ARROW_CONF_LOCK, conf_scope(
+        spark, {"spark.sql.execution.arrow.pyspark.enabled": "true"}
+    ):
+        yield

@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import conf_scope
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -409,6 +412,13 @@ def _latest_bloom_snapshot(manifest_path: str, before_batch_id: int):
         return f.read(), best
 
 
+#: broadcast envelope of the ``confirm='broadcast'`` batch body: a
+#: batch whose MEASURED distinct-fingerprint count exceeds 2M (~64 MB
+#: of raw keys before hashed-relation overhead) takes the exact shuffle
+#: body for that batch instead of building an oversized hashed relation.
+_BROADCAST_MAX_FPS = 2_000_000
+
+
 def incremental_dedup_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -419,7 +429,6 @@ def incremental_dedup_batch(
     bloom_bits: int | None = None,
     collect_stats: bool = False,
     confirm: str = "shuffle",
-    broadcast_max_fps: int = 2_000_000,
 ) -> dict:
     """One micro-batch of the streaming manifest dedup (the foreachBatch
     body of :func:`stream_incremental_dedup`, module-level so replay can
@@ -448,8 +457,7 @@ def incremental_dedup_batch(
       manifest is scanned, never shuffled.  Assumes micro-batches are
       broadcast-sized (they are, by construction of a stream) -- and
       ENFORCES it: a batch whose distinct-fingerprint count exceeds
-      ``broadcast_max_fps`` (default 2M, ~64 MB of raw keys before
-      hashed-relation overhead) auto-falls back to the exact shuffle
+      ``_BROADCAST_MAX_FPS`` auto-falls back to the exact shuffle
       body for THAT batch instead of OOMing the driver/executors on
       the broadcast build; the fallback is value-identical and
       stamped in the returned stats (``broadcast_fallback``).  The
@@ -507,7 +515,7 @@ def incremental_dedup_batch(
             .distinct()
             .count()
         )
-        if n_fps > broadcast_max_fps:
+        if n_fps > _BROADCAST_MAX_FPS:
             # envelope exceeded: this batch would build an oversized
             # hashed relation -- take the exact shuffle body instead
             # (value-identical; the next normal-sized batch resumes
@@ -798,7 +806,6 @@ def stream_incremental_dedup(
     available_now: bool = True,
     bloom_bits: int | None = None,
     confirm: str = "shuffle",
-    broadcast_max_fps: int = 2_000_000,
 ):
     """Continuous-ingestion dedup: the streaming twin of the batch
     ``incremental_dedup`` manifest pipeline.  Each micro-batch of
@@ -821,7 +828,7 @@ def stream_incremental_dedup(
     maintenance scales with the manifest like the scan it optimizes,
     so it only pays when the batch's distinct-fingerprint broadcast
     is itself too large.  The broadcast envelope is enforced per batch
-    via ``broadcast_max_fps`` (see :func:`incremental_dedup_batch`) --
+    via ``_BROADCAST_MAX_FPS`` (see :func:`incremental_dedup_batch`) --
     an anomalous oversized batch degrades to the exact body for that
     batch instead of failing the stream."""
     writer = (
@@ -829,7 +836,6 @@ def stream_incremental_dedup(
             lambda df, bid: incremental_dedup_batch(
                 df, bid, manifest_path, out_path, text_col, id_col,
                 bloom_bits=bloom_bits, confirm=confirm,
-                broadcast_max_fps=broadcast_max_fps,
             )
         )
         .option("checkpointLocation", checkpoint)
@@ -907,61 +913,26 @@ def streaming_shuffle_partitions(
     return max(floor, min(cap, int(input_nbytes // per_partition_bytes)))
 
 
-class _stream_confs:
-    """Set streaming-scoped session confs for the duration of a bounded
-    stream run, restoring priors on exit (the ``rocksdb_state``
-    pattern).  ``state_partitions`` pins ``spark.sql.shuffle.partitions``
-    (which fixes a NEW stream's state partitioning at first checkpoint);
-    ``skip_no_data_batch`` disables no-data micro-batches -- ONLY
-    correct for sinks whose rows are all emitted eagerly in data
-    batches (inner stream-stream joins, complete-mode aggregations,
-    foreachBatch bodies).  Append-mode aggregations and OUTER joins
-    need the no-data finalization batch to emit watermark-closed
-    results -- callers for those MUST leave it True.
-
-    These are SESSION-GLOBAL confs (same caveat as
-    ``session.arrow_transfer``): two concurrent streams in one session
-    would cross-contaminate or race on restore -- the engine's callers
-    run streams one at a time from the driver thread, which is the
-    documented operating mode.  A failure mid-``__enter__`` rolls back
-    the keys already applied before re-raising (ADVICE r12)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_partitions: int | None = None,
-        skip_no_data_batch: bool = False,
-    ):
-        self.spark = spark
-        self.confs: dict[str, str] = {}
-        if state_partitions is not None:
-            self.confs["spark.sql.shuffle.partitions"] = str(state_partitions)
-        if skip_no_data_batch:
-            self.confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-        self._saved: dict[str, str | None] = {}
-
-    def __enter__(self):
-        try:
-            for k, v in self.confs.items():
-                try:
-                    self._saved[k] = self.spark.conf.get(k)
-                except Exception:
-                    self._saved[k] = None
-                self.spark.conf.set(k, v)
-        except BaseException:
-            # roll back whatever was already applied so a failed enter
-            # does not leave the session half-configured
-            self.__exit__()
-            raise
-        return self
-
-    def __exit__(self, *exc):
-        for k, old in self._saved.items():
-            if old is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, old)
-        return False
+def _stream_confs(
+    state_partitions: int | None = None, skip_no_data_batch: bool = False
+) -> dict[str, str]:
+    """Streaming-scoped session confs for a bounded stream run, applied
+    with ``session.conf_scope``.  ``state_partitions`` pins
+    ``spark.sql.shuffle.partitions`` (which fixes a NEW stream's state
+    partitioning at first checkpoint); ``skip_no_data_batch`` disables
+    no-data micro-batches -- ONLY correct for sinks whose rows are all
+    emitted eagerly in data batches (inner stream-stream joins,
+    complete-mode aggregations, foreachBatch bodies).  Append-mode
+    aggregations and OUTER joins need the no-data finalization batch
+    to emit watermark-closed results -- callers for those MUST leave it
+    False.  The engine's callers run streams one at a time from the
+    driver thread (the scope's session-global caveat)."""
+    confs: dict[str, str] = {}
+    if state_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    if skip_no_data_batch:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    return confs
 
 
 def run_to_completion(
@@ -986,11 +957,11 @@ def run_to_completion(
     :func:`streaming_shuffle_partitions`); ``skip_no_data_batch``
     drops the trailing no-data micro-batch -- ONLY pass True when the
     sink's rows are all emitted in data batches (inner joins,
-    complete-mode aggs); see :class:`_stream_confs`."""
+    complete-mode aggs); see :func:`_stream_confs`."""
     spark = agg.sparkSession
     name = f"stream_{uuid.uuid4().hex[:12]}"
     with tempfile.TemporaryDirectory() as ckpt:
-        with _stream_confs(spark, state_partitions, skip_no_data_batch):
+        with conf_scope(spark, _stream_confs(state_partitions, skip_no_data_batch)):
             q = (
                 agg.writeStream.format("memory")
                 .queryName(name)
@@ -1007,6 +978,13 @@ def run_to_completion(
     return result
 
 
+#: the RocksDB state-store provider (+ changelog checkpointing) for
+#: queries started inside ``session.conf_scope(spark,
+#: ROCKSDB_STATE_CONFS)``.  State semantics are provider-independent --
+#: results must be identical to the default provider (pinned by tests
+#: and the ``*_rocksdb`` registry query); what changes is WHERE state
+#: lives (executor disk vs heap), which is what makes large stateful
+#: topologies viable.
 ROCKSDB_STATE_CONFS = {
     # The production state backend: state lives in per-partition
     # RocksDB instances on executor LOCAL DISK (block cache in memory),
@@ -1020,37 +998,6 @@ ROCKSDB_STATE_CONFS = {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
 }
-
-
-class rocksdb_state:
-    """Context manager switching streaming state to the RocksDB
-    provider (+ changelog checkpointing) for queries started inside the
-    block, restoring prior session confs on exit.  State semantics are
-    provider-independent -- results must be identical to the default
-    provider (pinned by tests and the ``*_rocksdb`` registry query);
-    what changes is WHERE state lives (executor disk vs heap), which is
-    what makes large stateful topologies viable."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self._saved: dict[str, str | None] = {}
-
-    def __enter__(self):
-        for k, v in ROCKSDB_STATE_CONFS.items():
-            try:
-                self._saved[k] = self.spark.conf.get(k)
-            except Exception:
-                self._saved[k] = None
-            self.spark.conf.set(k, v)
-        return self
-
-    def __exit__(self, *exc):
-        for k, old in self._saved.items():
-            if old is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, old)
-        return False
 
 
 def stream_scd2_merge(

@@ -498,11 +498,12 @@ def test_lm_cache_registry_release(spark):
     assert release_pinned(spark) == 0
 
 
-def test_minhash_slim_and_small_shapes_value_identical(corpus):
+def test_minhash_slim_and_small_shapes_value_identical(corpus, monkeypatch):
     """The r10 crossover gate: slim_postings=False (r8 sig-on-posting
     shape) and the slim scale shape must produce identical rows --
     est_jaccard is a pure function of the two signatures, so where it
     is computed (bucket expansion vs signature rejoin) cannot matter."""
+    from big_data_co2_emission_analysis_spark.operators import dedup
     from big_data_co2_emission_analysis_spark.operators.dedup import (
         minhash_banded_pairs,
     )
@@ -515,8 +516,9 @@ def test_minhash_slim_and_small_shapes_value_identical(corpus):
             ).collect()
         )
 
-    slim = rows(slim_postings=True, prune_verify=True)
-    small = rows(slim_postings=False, prune_verify=False)
+    slim = rows(slim_postings=True)
+    small = rows(slim_postings=False)
     assert small == slim and small
     # the candidate-id broadcast gate's shuffle fallback: same rows
-    assert rows(slim_postings=True, prune_verify=True, broadcast_max_ids=0) == slim
+    monkeypatch.setattr(dedup, "_BROADCAST_MAX_IDS", 0)
+    assert rows(slim_postings=True) == slim

@@ -1,6 +1,7 @@
 """Crossover-gate canaries (VERDICT r10 #6): the byte gates added in
 r9/r10 switch PLAN SHAPES on corpus size -- minhash slim/stock postings,
-the distinct-count repartition-first rewrite -- so a regression in a
+the distinct-count repartition-first rewrite, the SimHash Arrow kernel
+-- so a regression in a
 gate threshold or in the wiring from gate to knobs would silently ship
 the wrong plan to one side of the crossover and only surface as a
 future bench delta.  These tests make a gate flip fail pytest instead:
@@ -122,8 +123,29 @@ def test_minhash_gate_flip_changes_plan_shape(spark, sf_dir, monkeypatch):
     # SEMI-FILTER (LeftSemi against the exploded pair-id spine), so its
     # exchanges scale with candidates rather than corpus x sig bytes.
     # Two semi joins: the signature prune + the verify-side corpus
-    # prune (prune_verify).
+    # prune.
     assert slim.count("LeftSemi") >= 2, (
         "slim branch lost the candidate-id semi-filter on the signature "
         "table (the r12 corpus-bytes fix):\n" + slim
     )
+
+
+def test_simhash_gate_flip_changes_plan_and_keeps_rows(spark, sf_dir, monkeypatch):
+    """SimHash's query-level byte gate, forced both ways at sf0.001:
+    at its default (64 MiB, far above the fixture) the row signs with
+    the JVM Column form; at 0 it signs through the Arrow kernel
+    (``simhash64_frame``, a MapInArrow node).  Both sides produce
+    identical rows."""
+    from big_data_co2_emission_analysis_spark.queries import mlops as M
+
+    def run():
+        df = M.simhash_signatures(spark, sf_dir)
+        plan = explain_formatted(df)
+        return plan, sorted((r.doc_id, r.simhash) for r in df.collect())
+
+    column_plan, column_rows = run()
+    monkeypatch.setattr(M, "_SIMHASH_ARROW_MIN_BYTES", 0)
+    arrow_plan, arrow_rows = run()
+    assert "MapInArrow" not in column_plan, column_plan
+    assert "MapInArrow" in arrow_plan, arrow_plan
+    assert arrow_rows == column_rows and column_rows

@@ -6,6 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_co2_emission_analysis_spark.operators import ngram_lm
 from big_data_co2_emission_analysis_spark.operators.ngram_lm import (
     BOS,
     bigram_lm_counts,
@@ -89,130 +90,90 @@ def test_unseen_bigram_gets_smoothed_floor(spark):
     assert out[1] == out[2]
 
 
-def test_ctx_join_strategies_agree_and_gate_the_plan(spark, sf_dir):
+def _scored(docs):
+    return sorted(
+        (r.doc_id, r.n_bigrams, r.avg_logprob, r.perplexity)
+        for r in score_docs_bigram_lm(docs).collect()
+    )
+
+
+def test_ctx_join_strategies_agree_and_gate_the_plan(spark, sf_dir, monkeypatch):
     """The vocabulary-sized ctx table must not be force-broadcast
-    (VERDICT r4 #4): 'shuffle' forbids broadcast, 'broadcast' forces
-    it, 'auto' decides from the measured count-table cardinality (r9)
-    -- and all three produce identical values."""
+    (VERDICT r4 #4): within the measured envelope the count/ctx tables
+    broadcast, above it (envelope forced to 0) they take the
+    shuffle-hash shape -- and both sides produce identical values."""
     from big_data_co2_emission_analysis_spark.plans.inspect import explain_formatted
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
-    rows = {}
-    for strat in ("auto", "broadcast", "shuffle"):
-        df = score_docs_bigram_lm(docs, ctx_join=strat)
-        rows[strat] = sorted(
-            (r.doc_id, r.n_bigrams, r.avg_logprob, r.perplexity)
-            for r in df.collect()
-        )
-    assert rows["auto"] == rows["broadcast"] == rows["shuffle"]
-    assert rows["auto"], "fixture produced no scored docs"
+    forced = explain_formatted(score_docs_bigram_lm(docs))
+    broadcast_rows = _scored(docs)
+    monkeypatch.setattr(ngram_lm, "_BROADCAST_MAX_BIGRAMS", 0)
+    shuffled = explain_formatted(score_docs_bigram_lm(docs))
+    shuffle_rows = _scored(docs)
+    assert broadcast_rows == shuffle_rows
+    assert broadcast_rows, "fixture produced no scored docs"
 
-    # 'shuffle' must plan the ctx join as a shuffle join; the unhinted
-    # (v,w) counts join stays size-gated by Catalyst (it may broadcast
-    # at fixture scale), so compare broadcast counts across strategies
-    # rather than demanding zero broadcasts
-    shuffled = explain_formatted(score_docs_bigram_lm(docs, ctx_join="shuffle"))
-    forced = explain_formatted(score_docs_bigram_lm(docs, ctx_join="broadcast"))
+    # the shuffle side must plan the ctx join as a shuffle join; the
+    # unhinted vocab cross join stays size-gated by Catalyst, so
+    # compare broadcast counts across the sides rather than demanding
+    # zero broadcasts
     assert "ShuffledHashJoin" in shuffled or "SortMergeJoin" in shuffled
     # formatted explain prints each node in the tree AND the detail
     # section, so one fewer join = a strictly smaller count
     assert shuffled.count("BroadcastHashJoin") < forced.count("BroadcastHashJoin")
 
-    with pytest.raises(ValueError):
-        score_docs_bigram_lm(docs, ctx_join="bogus")
 
-
-def test_ctx_join_auto_uses_measured_envelope(spark, sf_dir):
-    """r9 contract: 'auto' decides from the MEASURED bigram-count
-    cardinality, not an estimate.  Within ``broadcast_max_bigrams``
-    the count/ctx tables broadcast (the scoring stream never
-    shuffles); above the envelope it degrades to the web-corpus
-    shuffle shape -- same fallback contract as the streaming-dedup
-    ``broadcast_max_fps``.  This subsumes the old ADVICE-r5 AQE
-    degrade rule: an exact count is safe with AQE on OR off, and
-    unlike AQE's gate it is not fooled by pre-aggregation exchange
-    bytes (at sf10 AQE sized the counts join by the ~97 MiB partial
-    exchange instead of the 96k-row table and shuffled a ~650 MiB
-    stream; module docstring)."""
+def test_ctx_join_auto_uses_measured_envelope(spark, sf_dir, monkeypatch):
+    """r9 contract: the join shape is decided from the MEASURED
+    bigram-count cardinality, not an estimate.  Within
+    ``_BROADCAST_MAX_BIGRAMS`` the count/ctx tables broadcast (the
+    scoring stream never shuffles); above the envelope it degrades to
+    the web-corpus shuffle shape -- same fallback contract as the
+    streaming-dedup ``_BROADCAST_MAX_FPS``.  This subsumes the old
+    ADVICE-r5 AQE degrade rule: an exact count is safe with AQE on OR
+    off, and unlike AQE's gate it is not fooled by pre-aggregation
+    exchange bytes (at sf10 AQE sized the counts join by the ~97 MiB
+    partial exchange instead of the 96k-row table and shuffled a
+    ~650 MiB stream; module docstring)."""
     from big_data_co2_emission_analysis_spark.plans.inspect import explain_formatted
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
 
     # within the envelope: broadcast shape
-    small_plan = explain_formatted(score_docs_bigram_lm(docs, ctx_join="auto"))
+    small_plan = explain_formatted(score_docs_bigram_lm(docs))
     assert "BroadcastHashJoin" in small_plan
 
-    # above the envelope: the exact shuffle shape of ctx_join='shuffle'
-    over_plan = explain_formatted(
-        score_docs_bigram_lm(docs, ctx_join="auto", broadcast_max_bigrams=0)
-    )
-    shuffle_plan = explain_formatted(score_docs_bigram_lm(docs, ctx_join="shuffle"))
+    # r10 byte gate: a row count within _BROADCAST_MAX_BIGRAMS but an
+    # estimated size above _BROADCAST_MAX_BYTES must ALSO degrade --
+    # the forced broadcast bypasses autoBroadcastJoinThreshold, so the
+    # envelope has to carry the byte-level safety itself
+    with monkeypatch.context() as m:
+        m.setattr(ngram_lm, "_BROADCAST_MAX_BYTES", 0)
+        byte_plan = explain_formatted(score_docs_bigram_lm(docs))
+
+    # above the row envelope: the shuffle shape
+    monkeypatch.setattr(ngram_lm, "_BROADCAST_MAX_BIGRAMS", 0)
+    over_plan = explain_formatted(score_docs_bigram_lm(docs))
     assert "ShuffledHashJoin" in over_plan or "SortMergeJoin" in over_plan
-    assert over_plan.count("BroadcastHashJoin") == shuffle_plan.count(
+    assert over_plan.count("BroadcastHashJoin") < small_plan.count(
         "BroadcastHashJoin"
     )
+    assert byte_plan.count("BroadcastHashJoin") == over_plan.count(
+        "BroadcastHashJoin"
+    )
+    want = _scored(docs)
 
     # the measured gate must hold with AQE OFF too (no estimate-based
     # broadcast may sneak back in above the envelope)
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        no_aqe_plan = explain_formatted(
-            score_docs_bigram_lm(docs, ctx_join="auto", broadcast_max_bigrams=0)
-        )
-        vals = sorted(
-            (r.doc_id, r.n_bigrams, r.avg_logprob, r.perplexity)
-            for r in score_docs_bigram_lm(
-                docs, ctx_join="auto", broadcast_max_bigrams=0
-            ).collect()
-        )
+        no_aqe_plan = explain_formatted(score_docs_bigram_lm(docs))
+        vals = _scored(docs)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
     assert "ShuffledHashJoin" in no_aqe_plan or "SortMergeJoin" in no_aqe_plan
-
-    want = sorted(
-        (r.doc_id, r.n_bigrams, r.avg_logprob, r.perplexity)
-        for r in score_docs_bigram_lm(docs, ctx_join="shuffle").collect()
-    )
     assert vals == want and vals
-
-    # r10 byte gate: a row count within broadcast_max_bigrams but an
-    # estimated size above broadcast_max_bytes must ALSO degrade --
-    # the forced broadcast bypasses autoBroadcastJoinThreshold, so the
-    # envelope has to carry the byte-level safety itself
-    byte_plan = explain_formatted(
-        score_docs_bigram_lm(docs, ctx_join="auto", broadcast_max_bytes=0)
-    )
-    assert byte_plan.count("BroadcastHashJoin") == shuffle_plan.count(
-        "BroadcastHashJoin"
-    )
-
-
-def test_stream_partitions_value_identical_and_shares_exchange(spark, sf_dir):
-    """stream_partitions (the r8 shared-bigram-stream mode) must be
-    value-identical to the stock two-extraction plan, and its executed
-    plan must extract the corpus ONCE: a single documents scan feeding
-    one (v, w) exchange that both the training aggregate and the
-    scoring join consume (AQE stage reuse)."""
-    import re
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(80)
-    stock = sorted(
-        (r.doc_id, r.n_bigrams, r.avg_logprob, r.perplexity)
-        for r in score_docs_bigram_lm(docs).collect()
-    )
-    shared_df = score_docs_bigram_lm(docs, stream_partitions=8)
-    shared = sorted(
-        (r.doc_id, r.n_bigrams, r.avg_logprob, r.perplexity)
-        for r in shared_df.collect()
-    )
-    assert shared == stock and shared
-
-    plan = shared_df._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan
-    final = plan.split("== Initial Plan ==")[0]
-    assert "Reused" in final, final[:4000]
-    assert len(re.findall(r"Scan parquet", final)) == 1, final[:4000]
 
 
 def test_auto_broadcast_keeps_stream_unshuffled_and_counts_cached(spark, sf_dir):
@@ -221,7 +182,7 @@ def test_auto_broadcast_keeps_stream_unshuffled_and_counts_cached(spark, sf_dir)
     that exchange was ~650 MiB), and the count table must be served
     from the cache (one explode+agg materialization, not three)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
-    df = score_docs_bigram_lm(docs, ctx_join="auto")
+    df = score_docs_bigram_lm(docs)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan, "count table not served from cache"

@@ -413,7 +413,6 @@ _NLJ_WHITELIST = {
     "contamination_check_bloom",  # 1-row broadcast bloom-bitmap build side
     "doc_lm_scores",          # 1-row vocabulary-size scalar build side
     "lm_perplexity_outliers",  # same 1-row vocabulary scalar
-    "curated_corpus_v2",      # same 1-row vocabulary scalar (LM stage inside)
     "rag_chunk_retrieval",    # 1-row broadcast query-embedding build side
     # k-row broadcast centroid codebook: the 1:k scoring expansion is
     # the designed IVF/quantizer-assignment shape (ann_ivf_det_top10
@@ -423,8 +422,6 @@ _NLJ_WHITELIST = {
     # r7: bins-row spine + two 1-row totals broadcast into the
     # groups x bins PSI arithmetic -- bounded build sides by design
     "quality_psi_by_source",
-    # r7: 1-row exact-P75 perplexity threshold broadcast into the gate
-    "curated_corpus_v3",
     # r7: same 1-row corpus (N, avgdl) scalar as bm25_top_docs
     "bm25_eval_metrics",
     # r7: 1-row grand-total and weight-sum scalars broadcast into the
@@ -434,8 +431,9 @@ _NLJ_WHITELIST = {
     # corpus embeddings map-side -- the multi-query twin of
     # rag_chunk_retrieval's 1-row pattern
     "hybrid_eval_metrics",
-    # r8: v3's 1-row P75 threshold + temperature_mixture_manifest's
-    # 1-row mixture scalars, composed in one pipeline
+    # r8: the 1-row exact-P75 perplexity threshold, the 1-row
+    # vocabulary scalar (LM stage inside) and temperature_mixture_
+    # manifest's 1-row mixture scalars, composed in one pipeline
     "curated_corpus_v4",
     # ADC table build: eval queries (bounded query set) CROSS the PQ
     # codebook (n_subspaces x k entries, broadcast constants) -- both

@@ -6,6 +6,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
+from big_data_co2_emission_analysis_spark.operators import scd2
 from big_data_co2_emission_analysis_spark.operators.scd2 import (
     scd2_apply,
     scd2_build,
@@ -87,7 +88,7 @@ def test_apply_out_of_order_update_slots_before_open_row(spark):
     ]
 
 
-def test_apply_late_update_inside_closed_history(spark):
+def test_apply_late_update_inside_closed_history(spark, monkeypatch):
     """A late update older than the key's LAST CLOSED version must
     splice into the closed interval (full re-chain for that key), never
     produce overlapping validity ranges; untouched keys keep their
@@ -118,7 +119,8 @@ def test_apply_late_update_inside_closed_history(spark):
 
     assert scd2_current(merged).count() == 2
     # the late-key broadcast gate's shuffle fallback gives the same rows
-    shuffled = scd2_apply(dim, late, ["k"], "ts", broadcast_max_keys=0)
+    monkeypatch.setattr(scd2, "_BROADCAST_MAX_KEYS", 0)
+    shuffled = scd2_apply(dim, late, ["k"], "ts")
     assert _rows(shuffled) == _rows(merged)
 
 

@@ -583,6 +583,42 @@ def test_outer_interval_join_finalized_region_anchoring(spark, tmp_path):
     ]
 
 
+def test_conf_scope_restores_and_rolls_back(spark):
+    """``session.conf_scope`` (the one save/set/restore used by stream
+    runs, the RocksDB provider swap and ``arrow_transfer``): restores a
+    prior value, unsets a key that was unset, restores after the body
+    raises, and rolls back already-applied keys when a later set fails
+    on entry (a static conf cannot be set at runtime)."""
+    from pyspark.errors import AnalysisException
+
+    from big_data_co2_emission_analysis_spark.session import conf_scope
+
+    held, fresh = "spark.sql.shuffle.partitions", "spark.co2spark.test.scopeProbe"
+    prior = spark.conf.get(held)
+    assert spark.conf.get(fresh, None) is None
+    confs = {held: str(int(prior) + 1), fresh: "on"}
+
+    def restored():
+        return spark.conf.get(held) == prior and spark.conf.get(fresh, None) is None
+
+    with conf_scope(spark, confs):
+        assert spark.conf.get(held) == confs[held]
+        assert spark.conf.get(fresh) == "on"
+    assert restored()
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        with conf_scope(spark, confs):
+            raise RuntimeError("body failed")
+    assert restored()
+
+    entered = []
+    with pytest.raises(AnalysisException):
+        with conf_scope(spark, {**confs, "spark.sql.warehouse.dir": "/nonexistent"}):
+            entered.append(True)
+    assert not entered
+    assert restored()
+
+
 def test_rocksdb_state_store_parity(spark, sf_dir):
     """The RocksDB state-store provider (production backend: state on
     executor local disk + changelog checkpointing, not executor heap)
@@ -590,8 +626,9 @@ def test_rocksdb_state_store_parity(spark, sf_dir):
     LEFT OUTER interval join (two keyed state stores + watermark-driven
     null emission).  Also asserts the provider actually engaged by
     reading RocksDB custom metrics from the final query progress."""
+    from big_data_co2_emission_analysis_spark.session import conf_scope
     from big_data_co2_emission_analysis_spark.streaming.windows import (
-        rocksdb_state,
+        ROCKSDB_STATE_CONFS,
         stream_stream_interval_join_outer,
     )
 
@@ -600,7 +637,7 @@ def test_rocksdb_state_store_parity(spark, sf_dir):
         stream_stream_interval_join_outer(read_events_stream(spark, sf_dir)), "append"
     )
     progress: list = []
-    with rocksdb_state(spark):
+    with conf_scope(spark, ROCKSDB_STATE_CONFS):
         rdb = run_to_completion(
             stream_stream_interval_join_outer(read_events_stream(spark, sf_dir)),
             "append",
@@ -697,16 +734,18 @@ def test_incremental_dedup_broadcast_confirm_matches_exact(spark, tmp_path):
                                 confirm="bogus")
 
 
-def test_broadcast_confirm_envelope_falls_back_to_exact(spark, tmp_path):
+def test_broadcast_confirm_envelope_falls_back_to_exact(spark, tmp_path, monkeypatch):
     """A batch whose distinct-fingerprint count exceeds
-    ``broadcast_max_fps`` must auto-fall back to the exact shuffle body
+    ``_BROADCAST_MAX_FPS`` must auto-fall back to the exact shuffle body
     (value-identical) instead of building an oversized broadcast, stamp
     the stats, and resume the broadcast shape on the next normal-sized
     batch."""
+    from big_data_co2_emission_analysis_spark.streaming import windows
     from big_data_co2_emission_analysis_spark.streaming.windows import (
         incremental_dedup_batch,
     )
 
+    monkeypatch.setattr(windows, "_BROADCAST_MAX_FPS", 4)
     schema = "doc_id long, text string"
     b0 = spark.createDataFrame([(1, "alpha"), (2, "beta"), (3, "alpha")], schema)
     big = spark.createDataFrame(
@@ -715,16 +754,13 @@ def test_broadcast_confirm_envelope_falls_back_to_exact(spark, tmp_path):
     b2 = spark.createDataFrame([(40, "gamma"), (41, "beta")], schema)
 
     manifest, out = str(tmp_path / "m"), str(tmp_path / "o")
-    s0 = incremental_dedup_batch(b0, 0, manifest, out, confirm="broadcast",
-                                 broadcast_max_fps=4)
+    s0 = incremental_dedup_batch(b0, 0, manifest, out, confirm="broadcast")
     assert s0["broadcast_fallback"] is False
     # batch 1: 9 distinct fingerprints > 4 -> forced exact-body fallback
-    s1 = incremental_dedup_batch(big, 1, manifest, out, confirm="broadcast",
-                                 broadcast_max_fps=4)
+    s1 = incremental_dedup_batch(big, 1, manifest, out, confirm="broadcast")
     assert s1["broadcast_fallback"] is True
     # batch 2: back under the envelope -> broadcast shape again
-    s2 = incremental_dedup_batch(b2, 2, manifest, out, confirm="broadcast",
-                                 broadcast_max_fps=4)
+    s2 = incremental_dedup_batch(b2, 2, manifest, out, confirm="broadcast")
     assert s2["broadcast_fallback"] is False
 
     got = sorted(

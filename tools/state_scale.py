@@ -36,9 +36,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from big_data_co2_emission_analysis_spark.session import conf_scope
     from big_data_co2_emission_analysis_spark.streaming.windows import (
+        ROCKSDB_STATE_CONFS,
         read_events_stream,
-        rocksdb_state,
         run_to_completion,
         stream_stream_interval_join_outer,
     )
@@ -88,7 +89,7 @@ def main() -> None:
 
     out = {"sf_dir": sf_dir, "providers": {}}
     out["providers"]["hdfs_backed_default"] = run()
-    with rocksdb_state(spark):
+    with conf_scope(spark, ROCKSDB_STATE_CONFS):
         out["providers"]["rocksdb_changelog"] = run()
     print(json.dumps(out))
 
